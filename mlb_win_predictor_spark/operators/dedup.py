@@ -284,8 +284,6 @@ def band_candidate_pairs(
     bands: int = 8,
     seed: int = 42,
     hash_family: str = "xxhash64",
-    band_split: int | None = None,
-    witness: dict | None = None,
 ) -> DataFrame:
     """Distinct (id_a, id_b) candidate pairs from classic LSH banding over
     hashed shingle sets ``sh`` (columns: id, ``shingles`` array<long>) —
@@ -297,37 +295,14 @@ def band_candidate_pairs(
     needs; the string form is what the DuckDB dual's ``string_agg``
     reproduces).
 
-    SKEW (r13, r12 verdict #4/#5): nothing in the data bounds a
-    (band_idx, band_sig) bucket — a cluster of m near-identical docs
-    shares every band signature, and the naive self-join puts all
-    m·(m−1)/2 candidate pairs of each of its ``bands`` buckets on ONE
-    join key (one task, however large m grows; AQE's skew split cannot
-    divide a single key). With ``band_split`` set, buckets larger than
-    it take a CHUNKED self-join: rows get a rank within their bucket
-    (ordered by id — deterministic), chunk = rank div band_split, the
-    b-side explodes to every chunk ≤ its own, and the join key becomes
-    (band_idx, band_sig, chunk) — m/band_split keys per hot bucket with
-    ≤ m × band_split output rows per key instead of one m²-row key.
-    Because rank is ordered by id and pairs require id_a < id_b, the
-    chunked path emits EXACTLY the pairs of the naive join (the a-side
-    chunk of a pair can never exceed the b-side chunk), so the candidate
-    set — and every downstream oracle-checked result — is identical;
-    only the per-task bound changes
-    (tests/test_operators.py::test_band_candidate_pairs_chunked_split_identical
-    pins all-hot / mixed / all-cold equality).
-
-    ``band_split`` is OPT-IN (default None = the plain self-join): the
-    split needs the bucket sizes, and counting (band_idx, band_sig)
-    groups costs an extra band-rows-grain aggregation + tag join that
-    the plain path simply does not have — measured 2.06 s → 4.74 s
-    (≈2.3×) on the sf0.1 banded-pairs chain in the r13 interleaved A/B,
-    pure overhead when no bucket exceeds the split (the witness measured
-    max bucket = tens at bench SFs). At corpus scale, where one
-    boilerplate/duplicate cluster can own millions of rows of one band
-    key, the extra pass is the insurance premium that keeps the job's
-    tail bounded — enable it there (the r12-verdict failure mode it
-    guards against is a single unsplittable join key, which no conf can
-    fix after the fact)."""
+    SKEW: nothing in the data bounds a (band_idx, band_sig) bucket — a
+    cluster of m near-identical docs shares every band signature, so the
+    self-join puts all m·(m−1)/2 candidate pairs of each of its ``bands``
+    buckets on ONE join key (one task, however large m grows; AQE's skew
+    split cannot divide a single key). Bucket sizes stay in the tens at
+    the catalog's scales; a corpus with one large duplicate cluster needs
+    a bucket-chunked join here, which costs an extra bucket-count
+    aggregation on every run."""
     r = num_hashes // bands
     if bands * r != num_hashes:
         raise ValueError("num_hashes must be divisible by bands")
@@ -351,73 +326,20 @@ def band_candidate_pairs(
         F.col(id_col),
         F.posexplode(F.array(*band_cols)).alias("band_idx", "band_sig"),
     )
-    if witness is not None:
-        # measurement hook (r13): bucket-size distribution of the REAL
-        # executed frame, so scripts/work_witness.py can report the
-        # per-bucket candidate bound (m·(m−1)/2 naive on one key vs
-        # m × band_split per key chunked).
-        witness.update(
-            band_rows=band_rows,
-            band_bucket_n=band_rows.groupBy("band_idx", "band_sig").agg(
-                F.count(F.lit(1)).alias("_bn")
-            ),
-        )
-    if band_split is None:
-        return (
-            band_rows.alias("a")
-            .join(
-                band_rows.alias("b"),
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_sig") == F.col("b.band_sig"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
-            .distinct()
-        )
-    bucket_n = band_rows.groupBy("band_idx", "band_sig").agg(
-        F.count(F.lit(1)).alias("_bn")
-    )
-    tagged = band_rows.join(bucket_n, ["band_idx", "band_sig"])
-    cold = tagged.filter(F.col("_bn") <= band_split)
-    hot = tagged.filter(F.col("_bn") > band_split)
-    cold_pairs = (
-        cold.alias("a")
+    return (
+        band_rows.alias("a")
         .join(
-            cold.alias("b"),
+            band_rows.alias("b"),
             (F.col("a.band_idx") == F.col("b.band_idx"))
             & (F.col("a.band_sig") == F.col("b.band_sig"))
             & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
         )
+        .distinct()
     )
-    wb = W.partitionBy("band_idx", "band_sig").orderBy(F.col(id_col).asc())
-    ranked = hot.withColumn(
-        "_ck", ((F.row_number().over(wb) - F.lit(1)) / F.lit(band_split)).cast("int")
-    )
-    hot_pairs = (
-        ranked.alias("a")
-        .join(
-            ranked.select(
-                F.col(id_col),
-                "band_idx",
-                "band_sig",
-                F.explode(F.sequence(F.lit(0), F.col("_ck"))).alias("_ck"),
-            ).alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a._ck") == F.col("b._ck"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-    )
-    return cold_pairs.unionByName(hot_pairs).distinct()
 
 
 def containment_banded_pairs(
@@ -432,7 +354,6 @@ def containment_banded_pairs(
     max_bucket: int = 64,
     containment_threshold: float = 0.8,
     hash_family: str = "xxhash64",
-    witness: dict | None = None,
 ) -> DataFrame:
     """ASYMMETRIC containment dedup at corpus scale — the executed 100 TB
     path that replaces the exact entry's ``doc_id < cap`` bound
@@ -502,14 +423,6 @@ def containment_banded_pairs(
         .distinct()
     )
     cand = cand_band.unionByName(cand_bk).distinct()
-    if witness is not None:
-        # measurement hook (r12, VERDICT #1): hand the REAL intermediate
-        # frames to the work-metric witness (scripts/work_witness.py) so
-        # candidate-growth linearity is measured on the executed plan,
-        # not a re-derivation that could drift. No effect when None.
-        witness.update(
-            sh=sh, cand_band=cand_band, posts=posts, cand_bk=cand_bk, cand=cand
-        )
     sa = sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
     sb = sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))

@@ -128,12 +128,6 @@ def pagerank(
         links.select(F.col("src").alias("node")).distinct(), "node", "left_anti"
     ).persist()
     has_dangling = dangling_nodes.count() > 0
-    if witness is not None:
-        # measurement hook (r12, VERDICT #1): per-step work is exactly
-        # one rank⋈links join (|links| contrib rows pre-agg) + one
-        # groupBy over |nodes| — expose the REAL persisted frames so
-        # scripts/work_witness.py records the executed plan's volumes.
-        witness.update(links=links, nodes=nodes, dangling=dangling_nodes)
 
     ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
 
@@ -238,7 +232,7 @@ def pagerank(
                 ).alias("_delta"),
             )
         if witness is not None and "first_chain" not in witness:
-            # measurement hook (r13): the loop body's real pre-checkpoint
+            # plan seam for tests: the loop body's real pre-checkpoint
             # plan — explain() on the returned frame truncates at the
             # checkpoint boundary, so this is the only way to plan-verify
             # per-step claims (exchange count, join strategy) off the

@@ -43,7 +43,7 @@ def _runtime_confs(spark: SparkSession) -> None:
     # rejects; read as long and convert in load_table (truncate ns -> µs,
     # matching DuckDB's cast semantics).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Scan-split sizing (r10): openCostInBytes models opening a file as
+    # Scan-split sizing: openCostInBytes models opening a file as
     # that many bytes of scan work; the 4 MiB default assumes seek-bound
     # spinning storage. Splits are sized max(openCost, input/parallelism)
     # capped at maxPartitionBytes, so on a 32-core box the default pins
@@ -64,10 +64,11 @@ def get_spark(
     app_name: str = "mlb-win-predictor-spark",
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a local session tuned for the test harness."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Build (or reuse) a local session tuned for the test harness, on
+    ``$SPARK_GRAFT_CPUS`` cores (default: every core of the machine)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus != "*" else 32
+        shuffle_partitions = int(cpus) if cpus != "*" else os.cpu_count() or 1
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -75,22 +76,22 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # r12 (optimization guide §3.1): let the planner pick a shuffled
-        # HASH join when its size conditions hold instead of always
-        # preferring sort-merge — skips both per-partition sorts when one
-        # side is modestly small. NOT a local-only tune: the hash-join
-        # size guards (canBuildLocalHashMap + muchSmaller) scale with
-        # autoBroadcastJoinThreshold × shuffle.partitions, equal-size
-        # joins still plan sort-merge (spill-safe), and hints/broadcasts
-        # are unaffected. Measured at sf0.1 over 6 shuffle-join entries:
-        # every median flat-to-faster, worst-case samples down ~20-50%.
-        # Rollback lever (r13, ADVICE r12): SHJ's build side cannot
-        # spill, and the size guards lean on Catalyst estimates that get
-        # unreliable downstream of Python-UDF/filter nodes. The r13
-        # all-84-plan sweep found only 3 SHJs, each building a
-        # unique-key side (no hot-key concentration possible), and
+        # Let the planner pick a shuffled HASH join when its size
+        # conditions hold instead of always preferring sort-merge — skips
+        # both per-partition sorts when one side is modestly small. NOT a
+        # local-only tune: the hash-join size guards (canBuildLocalHashMap
+        # + muchSmaller) scale with autoBroadcastJoinThreshold ×
+        # shuffle.partitions, equal-size joins still plan sort-merge
+        # (spill-safe), and hints/broadcasts are unaffected. Measured at
+        # sf0.1 over 6 shuffle-join entries: every median flat-to-faster,
+        # worst-case samples down ~20-50%.
+        # Rollback lever: SHJ's build side cannot spill, and the size
+        # guards lean on Catalyst estimates that get unreliable downstream
+        # of Python-UDF/filter nodes. Across the headline plans only 3
+        # SHJs appear, each building a unique-key side (no hot-key
+        # concentration possible), and
         # test_equal_size_corpus_join_stays_sort_merge pins the guard —
-        # but a deployment seeing build-side OOM at larger scale flips
+        # a deployment seeing build-side OOM at larger scale sets
         # SPARK_GRAFT_PREFER_SMJ=true, no code change.
         .config(
             "spark.sql.join.preferSortMergeJoin",
@@ -247,10 +248,6 @@ def fan_out(df: DataFrame, min_bytes: int = 0) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -1,4 +1,16 @@
-"""Regenerate PLANS.md from live explain("formatted") output."""
+"""Regenerate PLANS.md from live explain("formatted") output.
+
+Usage: python scripts/dump_plans.py [OUT_DIR]
+
+Without OUT_DIR, rewrites PLANS.md from the ``PICKS`` entries. With it,
+writes ``OUT_DIR/<name>.txt``, the full ``explain("formatted")`` of every
+``bench.HEADLINE`` entry, for diffing plan shapes before and after a
+change. Plans are captured at sf0.01: plan shape (exchanges, join
+strategy, pushed filters, Python nodes) matches sf0.1 up to AQE's runtime
+statistics. Entries that execute on call and return a materialized
+result (streaming capstones, checkpointing iterative operators) show
+only their terminal scan.
+"""
 
 from __future__ import annotations
 
@@ -7,10 +19,13 @@ import io
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from mlb_win_predictor_spark.queries import QUERIES  # noqa: E402
-from mlb_win_predictor_spark.session import get_spark  # noqa: E402
+from mlb_win_predictor_spark.session import get_spark, release_caches  # noqa: E402
+
+SF = "/root/testdata/sf0.01"
 
 PICKS = [
     ("scan_project_filter", "filter + projection pushed into the parquet scan"),
@@ -439,10 +454,31 @@ audited here rather than dumped above:
 """
 
 
-def main() -> None:
-    spark = get_spark(shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    sf = "/root/testdata/sf0.01"
+def plan_of(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def dump_headline(spark, outdir: str) -> None:
+    from bench import HEADLINE
+
+    os.makedirs(outdir, exist_ok=True)
+    for name in HEADLINE:
+        try:
+            txt = plan_of(QUERIES[name].fn(spark, SF))
+        except Exception as e:  # pragma: no cover - diagnostic path
+            txt = f"ERROR dumping plan: {e}\n"
+        finally:
+            release_caches(spark)
+        with open(os.path.join(outdir, f"{name}.txt"), "w") as fh:
+            fh.write(f"# {name} — explain('formatted') at {SF}\n")
+            fh.write(txt)
+        print(name, flush=True)
+
+
+def write_plans_md(spark) -> None:
     out = [
         "# PLANS — physical plans of representative catalog queries",
         "",
@@ -452,17 +488,21 @@ def main() -> None:
         "",
     ]
     for name, why in PICKS:
-        df = QUERIES[name].fn(spark, sf)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        tree = buf.getvalue().split("\n\n")[0]
+        tree = plan_of(QUERIES[name].fn(spark, SF)).split("\n\n")[0]
         out += [f"## {name}", "", f"*{why}*", "", "```", tree.strip(), "```", ""]
     out.append(APPENDIX.strip())
     out.append("")
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(repo, "PLANS.md"), "w") as fh:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))
+
+
+def main() -> None:
+    spark = get_spark(shuffle_partitions=8)
+    spark.sparkContext.setLogLevel("ERROR")
+    if len(sys.argv) > 1:
+        dump_headline(spark, sys.argv[1])
+    else:
+        write_plans_md(spark)
 
 
 if __name__ == "__main__":

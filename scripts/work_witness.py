@@ -1,27 +1,18 @@
-"""Work-metric linearity witness (r12, r11 VERDICT item #1).
+"""Work witness: how much more work three scale-sensitive entries do
+between two data scales.
 
-Wall-clock at a 32-core-saturated box cannot distinguish 10×-linear
-from early-quadratic growth — r11's semantic-dedup 13.4× proved these
-flags can be real n² bugs. This script therefore records WORK metrics
-— exact intermediate-volume counts off the executed operators' own
-frames (the ``witness`` hooks in ``operators.graph.pagerank`` /
-``operators.dedup.containment_banded_pairs``) plus each entry's total
-shuffle records/bytes from the Spark UI REST API — at two SFs, giving
-the ``pagerank_copurchase`` (10.78×) and ``ngram_containment_banded``
-(10.29×) second-decade wall ratios a data-volume witness.
-
-Counts are deterministic and ambient-load-insensitive (unlike wall
-times), so this script needs no quiet-box gate.
-
-Also probes ``multimodal_decode_jpeg``'s decode-stage task count
-(r11 VERDICT item #3): the r6 PNG single-row-group bug had the same
-above-data-factor wall signature, so the witness records whether the
-decode stage fans out across cores at the bigger SF.
+Runs ``pagerank_copurchase``, ``ngram_containment_banded`` and
+``multimodal_decode_jpeg`` at ``--a`` and ``--b`` under the benchmark's
+ledger (``perfbench.ledger``, read from Spark's status store with the UI
+off) and prints, per entry, Spark jobs, tasks, scanned input MB, shuffle
+read/write MB and the call's wall time at both scales, plus their b/a
+ratios. The input ratio is the entry's data factor. Job, task, input and
+shuffle figures follow the plan and the data, not the machine's load, so
+a shuffle ratio far above the data factor flags super-linear work that
+wall-clock ratios on a busy box cannot separate from noise.
 
 Usage:
-    python scripts/work_witness.py \
-        [--a /root/repo/.bench/sf1] [--b /root/repo/.bench/sf10] \
-        [--out /root/repo/WITNESS_SF10.json]
+    python scripts/work_witness.py --a SF_DIR_A --b SF_DIR_B [--out FILE.json]
 """
 
 from __future__ import annotations
@@ -30,377 +21,65 @@ import argparse
 import json
 import os
 import sys
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
+from mlb_win_predictor_spark.queries import QUERIES  # noqa: E402
+from mlb_win_predictor_spark.session import get_spark, release_caches  # noqa: E402
+from perfbench.ledger import Ledger  # noqa: E402
 
-
-def build_session() -> SparkSession:
-    """get_spark's exact confs but with the UI enabled — the REST stage
-    endpoint is the per-stage metric source (the r10 profiling recipe)."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("work-witness")
-        .config("spark.sql.shuffle.partitions", cpus if cpus != "*" else "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.retainedStages", "10000")
-        .config("spark.sql.warehouse.dir", "/tmp/mlb-spark-warehouse")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
-    from mlb_win_predictor_spark.session import _runtime_confs
-
-    _runtime_confs(spark)
-    return spark
-
-
-def _stages(spark: SparkSession) -> list[dict]:
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = f"{ui}/api/v1/applications/{app}/stages?status=COMPLETE"
-    with urllib.request.urlopen(url) as r:
-        return json.load(r)
-
-
-SHUFFLE_KEYS = (
-    "shuffleWriteRecords",
-    "shuffleWriteBytes",
-    "shuffleReadRecords",
-    "shuffleReadBytes",
+ENTRIES = ("pagerank_copurchase", "ngram_containment_banded", "multimodal_decode_jpeg")
+METRICS = (
+    "spark.jobs",
+    "spark.tasks",
+    "spark.input_mb",
+    "spark.shuffle_read_mb",
+    "spark.shuffle_write_mb",
+    "queries.call_s",
 )
 
 
-def shuffle_totals(spark: SparkSession) -> dict:
-    out = {k: 0 for k in SHUFFLE_KEYS}
-    for s in _stages(spark):
-        for k in SHUFFLE_KEYS:
-            out[k] += int(s.get(k, 0) or 0)
-    return out
-
-
-def delta(after: dict, before: dict) -> dict:
-    return {k: after[k] - before[k] for k in SHUFFLE_KEYS}
-
-
-def run_entry_with_shuffle(spark: SparkSession, name: str, sf_dir: str) -> dict:
-    """Run a catalog entry to completion, returning its row count and
-    the shuffle records/bytes it alone moved (stage-total delta)."""
-    import __spark_entry__ as se
-    from mlb_win_predictor_spark.session import release_caches
-
-    before = shuffle_totals(spark)
+def measure(spark, name: str, sf_dir: str) -> dict[str, float]:
+    """Run one catalog entry to its terminal count under the ledger and
+    return its row count and ``METRICS``."""
+    jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+    ledger = Ledger(spark, jvm_pid)
     try:
-        n = se.queries()[name](spark, sf_dir).count()
+        n, trace = ledger.run(QUERIES[name].fn, spark, sf_dir)
     finally:
         release_caches(spark)
-    d = delta(shuffle_totals(spark), before)
-    d["rows_out"] = n
-    return d
+        ledger.close()
+    return {"rows": n, **{k: trace.metrics[k] for k in METRICS}}
 
 
-def pagerank_volumes(spark: SparkSession, sf_dir: str) -> dict:
-    """The executed operator's own intermediates via the witness hook:
-    per-iteration work is exactly |links| join rows + |nodes| agg rows."""
-    from mlb_win_predictor_spark.operators.graph import pagerank
-    from mlb_win_predictor_spark.session import load_table, release_caches
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    # mirror the entry's r12 edge build (one collect_set aggregation,
-    # not a self-join) so the witness measures the executed shape
-    parts = li.groupBy("l_orderkey").agg(F.collect_set("l_partkey").alias("ps"))
-    edges = (
-        parts.select(F.explode("ps").alias("src"), "ps")
-        .select("src", F.explode("ps").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-    )
-    w: dict = {}
-    try:
-        ranks = pagerank(edges, iterations=5, tol=None, checkpoint_every=2, witness=w)
-        ranks.count()  # materialize so the witness frames are final
-        return {
-            "n_lineitem": li.count(),
-            "n_edges_raw": edges.count(),
-            "n_links": w["links"].count(),
-            "n_nodes": w["nodes"].count(),
-            "per_step_rows": None,  # filled below from links+nodes
-        }
-    finally:
-        release_caches(spark)
-
-
-def containment_volumes(spark: SparkSession, sf_dir: str) -> dict:
-    """Candidate-set sizes off the executed containment operator (the
-    catalog entry's exact configuration: md5 family, n=3, thr=0.8)."""
-    from mlb_win_predictor_spark.operators.dedup import containment_banded_pairs
-    from mlb_win_predictor_spark.queries.text import (
-        CONTAINMENT_THRESHOLD,
-        NGRAM_N,
-    )
-    from mlb_win_predictor_spark.session import fan_out, load_table, release_caches
-
-    d = fan_out(load_table(spark, sf_dir, "documents"))
-    w: dict = {}
-    try:
-        pairs = containment_banded_pairs(
-            d,
-            n=NGRAM_N,
-            containment_threshold=CONTAINMENT_THRESHOLD,
-            hash_family="md5",
-            witness=w,
-        )
-        n_final = pairs.count()
-        return {
-            "n_docs": d.count(),
-            "n_shingle_tokens": w["sh"]
-            .select(F.sum(F.size("shingles")).alias("s"))
-            .first()["s"],
-            "n_band_collision_pairs": w["cand_band"].count(),
-            "n_bottomk_postings_after_cut": w["posts"].count(),
-            "n_bottomk_pairs": w["cand_bk"].count(),
-            "n_candidate_pairs_union": w["cand"].count(),
-            "n_final_pairs": n_final,
-        }
-    finally:
-        release_caches(spark)
-
-
-def candidate_bucket_bounds(spark: SparkSession, sf_dir: str) -> dict:
-    """r13 (r12 verdict #4): per-bucket candidate bounds off the REAL
-    executed frames — the witness the hot-bucket split is judged by.
-
-    - band buckets: (band_idx, band_sig) sizes from band_candidate_pairs'
-      witness hook; naive per-bucket pair count is m·(m−1)/2 on ONE join
-      key — the r13 chunked path bounds any one key's output at
-      m × band_split.
-    - PPJoin prefix index: per-shingle posting sizes of the executed
-      prefix table of dedup_jaccard_prefix (rarest-first construction is
-      the anti-skew claim; this measures it).
-    """
-    from mlb_win_predictor_spark.operators.dedup import (
-        _shingle_hash,
-        band_candidate_pairs,
-        ngram_shingles,
-    )
-    from mlb_win_predictor_spark.session import fan_out, load_table, release_caches
-
-    out: dict = {}
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    try:
-        sh = ngram_shingles(docs.select("doc_id", "text"), "text", 3).select(
-            "doc_id",
-            F.transform("shingles", lambda s: _shingle_hash(s, "md5")).alias(
-                "shingles"
-            ),
-        ).persist()
-        w: dict = {}
-        band_candidate_pairs(sh, hash_family="md5", witness=w)
-        bn = w["band_bucket_n"]
-        row = bn.agg(
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.max("_bn").alias("max_bucket"),
-            F.sum((F.col("_bn") * (F.col("_bn") - 1) / 2).cast("long")).alias(
-                "naive_pairs"
-            ),
-            F.sum(F.when(F.col("_bn") > 1024, 1).otherwise(0)).alias(
-                "n_hot_buckets_gt_split"
-            ),
-        ).first()
-        out["band"] = {
-            "n_buckets": row["n_buckets"],
-            "max_bucket_rows": row["max_bucket"],
-            "naive_pair_rows": row["naive_pairs"],
-            "n_buckets_over_band_split": row["n_hot_buckets_gt_split"],
-            "max_rows_per_join_key_naive": int(
-                row["max_bucket"] * (row["max_bucket"] - 1) / 2
-            ),
-            "max_rows_per_join_key_chunked": int(row["max_bucket"]) * 1024,
-        }
-    finally:
-        release_caches(spark)
-    # PPJoin prefix-index posting sizes (the executed dedup_jaccard_prefix
-    # shape: df-rarest-first prefixes, length filter folded in)
-    from mlb_win_predictor_spark.queries.text import PREFIX_N, PREFIX_T
-
-    try:
-        d = fan_out(load_table(spark, sf_dir, "documents")).select(
-            "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks")
-        ).filter(F.size(F.col("toks")) >= PREFIX_N)
-        shingled = d.select(
-            "doc_id",
-            F.array_sort(
-                F.array_distinct(
-                    F.transform(
-                        __import__(
-                            "mlb_win_predictor_spark.functions.ngrams",
-                            fromlist=["word_ngrams"],
-                        ).word_ngrams(F.col("toks"), PREFIX_N),
-                        lambda s: F.xxhash64(s),
-                    )
-                )
-            ).alias("shingles"),
-        )
-        exploded = shingled.select(
-            "doc_id",
-            F.size("shingles").alias("n_sh"),
-            F.explode("shingles").alias("sh"),
-        )
-        df_tbl = exploded.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
-        from pyspark.sql.window import Window as W
-
-        prefix_len = F.col("n_sh") - F.ceil(F.lit(PREFIX_T) * F.col("n_sh")) + 1
-        prefix = (
-            exploded.join(df_tbl, "sh")
-            .withColumn(
-                "rn",
-                F.row_number().over(W.partitionBy("doc_id").orderBy("df", "sh")),
-            )
-            .filter(F.col("rn") <= prefix_len)
-            .select("doc_id", "sh")
-        )
-        pr = prefix.groupBy("sh").agg(F.count(F.lit(1)).alias("m")).agg(
-            F.count(F.lit(1)).alias("n_posting_keys"),
-            F.max("m").alias("max_posting"),
-            F.sum((F.col("m") * (F.col("m") - 1) / 2).cast("long")).alias(
-                "prefix_join_pairs"
-            ),
-        ).first()
-        out["ppjoin_prefix"] = {
-            "n_posting_keys": pr["n_posting_keys"],
-            "max_posting_rows": pr["max_posting"],
-            "prefix_join_pair_rows": pr["prefix_join_pairs"],
-        }
-    finally:
-        release_caches(spark)
-    return out
-
-
-def jpeg_decode_stage_probe(spark: SparkSession, sf_dir: str) -> dict:
-    """Task-count evidence for the decode stage (r11 VERDICT #3): run
-    the entry, then report the completed stage with the largest
-    executorRunTime in its window — the decode mapInPandas stage."""
-    import __spark_entry__ as se
-    from mlb_win_predictor_spark.session import release_caches
-
-    before_ids = {s["stageId"] for s in _stages(spark)}
-    try:
-        n = se.queries()["multimodal_decode_jpeg"](spark, sf_dir).count()
-    finally:
-        release_caches(spark)
-    new = [s for s in _stages(spark) if s["stageId"] not in before_ids]
-    top = max(new, key=lambda s: s.get("executorRunTime", 0))
-    return {
-        "rows_out": n,
-        "n_new_stages": len(new),
-        "decode_stage_num_tasks": top.get("numTasks"),
-        "decode_stage_executor_run_ms": top.get("executorRunTime"),
-        "decode_stage_executor_cpu_ms": round(
-            (top.get("executorCpuTime") or 0) / 1e6
-        ),
-        # ALL new stages, by run time. NB: mapInPandas work executes in
-        # PYTHON workers — executorCpuTime counts only the JVM task
-        # thread (Arrow shuttling), so for codec stages run_ms is the
-        # work signal and cpu_ms is expected to be tiny. The
-        # load-insensitive evidence is numTasks (fan-out) — run_ms is
-        # ambient-load-contaminated like any wall measure.
-        "stages": [
-            {
-                "tasks": s.get("numTasks"),
-                "run_ms": s.get("executorRunTime"),
-                "cpu_ms": round((s.get("executorCpuTime") or 0) / 1e6),
-            }
-            for s in sorted(new, key=lambda s: -(s.get("executorRunTime") or 0))
-        ],
-    }
+def ratios(a: dict[str, float], b: dict[str, float]) -> dict[str, float | None]:
+    return {k: round(b[k] / a[k], 3) if a[k] else None for k in a}
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--a", default="/root/repo/.bench/sf1")
-    ap.add_argument("--b", default="/root/repo/.bench/sf10")
-    ap.add_argument("--out", default="/root/repo/WITNESS_SF10.json")
-    ap.add_argument("--jpeg-only", action="store_true")
-    ap.add_argument(
-        "--buckets-only",
-        action="store_true",
-        help="r13: candidate-bucket bound report (band + PPJoin prefix)",
-    )
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--a", required=True, help="smaller scale's data dir")
+    ap.add_argument("--b", required=True, help="larger scale's data dir")
+    ap.add_argument("--out", help="also write the report as JSON here")
     args = ap.parse_args()
 
-    if args.buckets_only:
-        spark = build_session()
-        out = {}
-        for tag, sf in (("a", args.a), ("b", args.b)):
-            if not os.path.isdir(sf):
-                continue
-            out[tag] = {"sf": sf, "buckets": candidate_bucket_bounds(spark, sf)}
-        print(json.dumps(out, indent=2))
-        with open(args.out, "w") as f:
-            json.dump(out, f, indent=2)
+    spark = get_spark(app_name="work-witness")
+    spark.sparkContext.setLogLevel("ERROR")
+    report: dict = {"sf_a": args.a, "sf_b": args.b}
+    try:
+        for name in ENTRIES:
+            a = measure(spark, name, args.a)
+            b = measure(spark, name, args.b)
+            report[name] = {"a": a, "b": b, "b/a": ratios(a, b)}
+            print(name)
+            for k in a:
+                r = report[name]["b/a"][k]
+                print(f"  {k:24s} {a[k]:12.3f} {b[k]:12.3f}  b/a={r}")
+    finally:
         spark.stop()
-        return
-
-    if args.jpeg_only:
-        spark = build_session()
-        out = {}
-        for tag, sf in (("a", args.a), ("b", args.b)):
-            out[tag] = {"sf": sf, "jpeg_decode": jpeg_decode_stage_probe(spark, sf)}
-        print(json.dumps(out, indent=2))
-        with open(args.out, "w") as f:
-            json.dump(out, f, indent=2)
-        spark.stop()
-        return
-
-    spark = build_session()
-    out: dict = {"sf_a": args.a, "sf_b": args.b, "loadavg_note": (
-        "counts and shuffle-record volumes are deterministic; only the "
-        "informational run-times depend on ambient load"
-    )}
-    for tag, sf in (("a", args.a), ("b", args.b)):
-        print(f"== {sf} ==", file=sys.stderr)
-        pr_vol = pagerank_volumes(spark, sf)
-        pr_vol["per_step_rows"] = pr_vol["n_links"] + pr_vol["n_nodes"]
-        pr_shuf = run_entry_with_shuffle(spark, "pagerank_copurchase", sf)
-        ct_vol = containment_volumes(spark, sf)
-        ct_shuf = run_entry_with_shuffle(spark, "ngram_containment_banded", sf)
-        jp = jpeg_decode_stage_probe(spark, sf)
-        out[tag] = {
-            "pagerank": {"volumes": pr_vol, "entry_shuffle": pr_shuf},
-            "containment": {"volumes": ct_vol, "entry_shuffle": ct_shuf},
-            "jpeg_decode": jp,
-        }
-
-    def ratios(pa: dict, pb: dict) -> dict:
-        return {
-            k: (round(pb[k] / pa[k], 3) if pa.get(k) else None)
-            for k in pa
-            if isinstance(pa.get(k), (int, float)) and isinstance(pb.get(k), (int, float))
-        }
-
-    out["ratios"] = {
-        "pagerank_volumes": ratios(out["a"]["pagerank"]["volumes"],
-                                   out["b"]["pagerank"]["volumes"]),
-        "pagerank_shuffle": ratios(out["a"]["pagerank"]["entry_shuffle"],
-                                   out["b"]["pagerank"]["entry_shuffle"]),
-        "containment_volumes": ratios(out["a"]["containment"]["volumes"],
-                                      out["b"]["containment"]["volumes"]),
-        "containment_shuffle": ratios(out["a"]["containment"]["entry_shuffle"],
-                                      out["b"]["containment"]["entry_shuffle"]),
-    }
-    with open(args.out, "w") as f:
-        json.dump(out, f, indent=2)
-    print(json.dumps(out["ratios"], indent=2))
-    spark.stop()
+    if args.out:
+        with open(args.out, "w") as fh:
+            json.dump(report, fh, indent=2)
 
 
 if __name__ == "__main__":

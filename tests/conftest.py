@@ -76,7 +76,6 @@ SLOW_TESTS: dict[str, set[str]] = {
         "test_semantic_dedup_two_level_assign",
         "test_mmr_diversified_topk_matches_numpy",
         "test_pq_topk_recall_vs_exact",
-        "test_band_candidate_pairs_chunked_split_identical",
     },
     "test_quality": {
         "test_bpe_batched_matches_sequential_on_tie_heavy_vocab",

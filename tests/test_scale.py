@@ -234,3 +234,27 @@ def test_dynamic_partition_pruning_on_fact_scan(spark, tmp_path):
     p = plan_of(j)
     assert "dynamicpruning" in p.lower(), "fact scan lacks DPP subquery"
     assert j.count() == o.filter(F.col("order_year") == 1996).count()
+
+
+def test_work_witness_measure_tracks_scale(spark):
+    """scripts/work_witness.py's measuring function: a fixed-shape entry
+    launches the same jobs at both scales while the bytes it scans grow
+    with the data. (q1's shuffle does not grow: its partial aggregation
+    writes one row per group per map task at either scale.)"""
+    import importlib.util
+    import os
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scripts",
+        "work_witness.py",
+    )
+    spec = importlib.util.spec_from_file_location("work_witness", path)
+    ww = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(ww)
+
+    small = ww.measure(spark, "q1_pricing_summary", SF)
+    big = ww.measure(spark, "q1_pricing_summary", "/root/testdata/sf0.01")
+    assert small["spark.jobs"] == big["spark.jobs"] > 0
+    assert big["spark.input_mb"] > small["spark.input_mb"] > 0
+    assert big["spark.shuffle_write_mb"] >= small["spark.shuffle_write_mb"] > 0
