@@ -1,11 +1,12 @@
-"""Shared word-n-gram expression builder.
+"""Shared word-n-gram expression builders.
 
 One guarded, optimized implementation for every consumer — the text
 query family (``queries/text.py``), the MinHash/containment shingle
 builders (``operators/dedup.py``), and the streaming decontamination
-gate. History shows why it must be shared: the short-doc guard and the
-element_at 4x optimization each had to be hand-mirrored across two
-copies before this hoist.
+gates (``streaming/jobs.py``). They are shared because copies drift: the
+short-doc guard and the element_at 4x optimization each had to be
+hand-mirrored across two copies of the gram builder before it was
+hoisted here, and the hashed gram set had eight copies.
 """
 
 from __future__ import annotations
@@ -38,3 +39,15 @@ def word_ngrams(toks, n: int):
             ),
         ),
     ).otherwise(F.array().cast("array<string>"))
+
+
+def hashed_gram_set(grams):
+    """The distinct 64-bit xxhash64 values of a gram array — the gram
+    set every decontamination, doc-frequency and shingle-join consumer
+    explodes or sorts. Hashing before the explode makes every downstream
+    key a fixed-width long instead of a ~50-byte string (set sizes and
+    overlaps unchanged w.h.p., collisions ~ n²/2⁶⁴), and ``array_distinct``
+    runs map-side, so no dedup shuffle follows. ``grams`` is either a
+    staged gram column or an inline ``word_ngrams`` expression; the
+    caller picks the staging (see ``word_ngrams``)."""
+    return F.array_distinct(F.transform(grams, lambda g: F.xxhash64(g)))

@@ -10,15 +10,18 @@ Four tiers, trading exactness for scale:
 
 All deterministic given seeds (MLlib hash seeds fixed; xxhash64 seed 42).
 The MinHash / SimHash family additionally supports a PORTABLE hash family
-(``hash_family="md5"``, r11): shingles/tokens hash through
+(``hash_family="md5"``): shingles/tokens hash through
 ``scalars.md5_int60`` and the per-signature hash functions become affine
 permutations ``(a_i·h + b_i) mod p`` over the Mersenne prime p = 2³¹−1 —
 every step exact-integer and re-derivable in DuckDB SQL, so the riding
-catalog entries are FULL value-hash oracles (the r10 ``cms_heavy_hitters``
-precedent). xxhash64 stays the corpus-scale default: one JVM hash per
-shingle per signature beats md5 on throughput, and the portable family
-exists for auditability, not speed. Entries not oracle-promoted are
-property-tested against exact oracles at small SF
+catalog entries are FULL value-hash oracles (as ``cms_heavy_hitters`` is).
+xxhash64 stays the corpus-scale default: one JVM hash per shingle per
+signature beats md5 on throughput (the md5 family runs ~35% slower, for
+``minhash_band_index`` over 40k docs and ``minhash_banded_pairs`` at
+sf0.1 on 4 cores), and the portable family exists for auditability, not
+speed. Both families share the shingle projection and the banding
+scaffolding below; only the hash expressions differ. Entries not
+oracle-promoted are property-tested against exact oracles at small SF
 (tests/test_operators.py) rather than DuckDB-hashed.
 """
 
@@ -45,17 +48,17 @@ def minhash_perm_consts(num_hashes: int, seed: int) -> list[tuple[int, int]]:
     nonzero; constants need only be fixed and well-spread, not
     cryptographic).
 
-    ``a_i`` is spread MULTIPLICATIVELY (r12): the original
-    ``seed·1000003 + 2i + 1`` family produced near-consecutive odd
-    ``a_i`` — permutation i differed from permutation 0 by an additive
-    drift ``i·(2h + 104729) mod p``, a strongly correlated family whose
-    min-hash estimates are not independent across i. Multiplying by
-    Knuth's 2654435761 per index decorrelates the slopes; the md5-family
-    planted-recall test (tests/test_operators.py) gates it.
+    ``a_i`` is spread MULTIPLICATIVELY: a ``seed·1000003 + 2i + 1``
+    family gives near-consecutive odd ``a_i`` — permutation i differs
+    from permutation 0 by an additive drift ``i·(2h + 104729) mod p``, a
+    strongly correlated family whose min-hash estimates are not
+    independent across i. Multiplying by Knuth's 2654435761 per index
+    decorrelates the slopes; the md5-family planted-recall test
+    (tests/test_operators.py) gates it.
 
-    Seed-robust by construction (r12 review: a naive
-    ``seed·const·(i+1) % p`` collapses EVERY slope through ``or 1`` at
-    seed=0): the base folds the seed into [1, p−1] first, and since p
+    Seed-robust by construction (a naive ``seed·const·(i+1) % p``
+    collapses EVERY slope through ``or 1`` at seed=0): the base folds
+    the seed into [1, p−1] first, and since p
     is prime and neither factor is ≡ 0 (mod p), ``base`` is nonzero —
     so the ``a_i = base·(i+1) mod p`` are pairwise DISTINCT and nonzero
     for any seed and any num_hashes < p."""
@@ -76,6 +79,55 @@ def _shingle_hash(s: Column, hash_family: str) -> Column:
     if hash_family == "md5":
         return md5_int60(s)
     return F.xxhash64(s)
+
+
+def _rows_per_band(num_hashes: int, bands: int) -> int:
+    r = num_hashes // bands
+    if bands * r != num_hashes:
+        raise ValueError("num_hashes must be divisible by bands")
+    return r
+
+
+def _hashed_shingles(
+    docs: DataFrame, id_col: str, text_col: str, n: int, hash_family: str
+) -> DataFrame:
+    """(id, ``shingles`` array<long>): each shingle string hashed to a
+    long ONCE, so every downstream pass (the min-hashes, the exact
+    Jaccard / containment set ops) operates on longs. Set semantics
+    survive w.h.p. (64-bit collisions ~ n²/2⁶⁴)."""
+    return ngram_shingles(docs.select(id_col, text_col), text_col, n).select(
+        id_col,
+        F.transform("shingles", lambda s: _shingle_hash(s, hash_family)).alias(
+            "shingles"
+        ),
+    )
+
+
+def _band_rows(
+    mins: DataFrame, id_col: str, num_hashes: int, bands: int, hash_family: str
+) -> DataFrame:
+    """One (id, band_idx, band_sig) row per LSH band of a signature table
+    (``minhash_signatures``' h0..h{k-1}): the persisted index rows and
+    the rows the candidate self-join matches on. ``band_sig`` is the
+    xxhash64 fold of the band's min-hashes (a long), or for the portable
+    family their '-'-joined STRING — band equality is all banding needs,
+    and the string form is what the DuckDB dual's ``string_agg``
+    reproduces."""
+    r = _rows_per_band(num_hashes, bands)
+    if hash_family == "md5":
+        band_cols = [
+            F.concat_ws("-", *[F.col(f"h{j * r + k}") for k in range(r)])
+            for j in range(bands)
+        ]
+    else:
+        band_cols = [
+            F.xxhash64(F.array(*[F.col(f"h{j * r + k}") for k in range(r)]))
+            for j in range(bands)
+        ]
+    return mins.select(
+        F.col(id_col),
+        F.posexplode(F.array(*band_cols)).alias("band_idx", "band_sig"),
+    )
 
 
 def ngram_shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
@@ -162,7 +214,7 @@ def minhash_signatures(
     columns (h0..h{k-1}). Zero shuffle — at corpus scale this is the
     table you persist.
 
-    ``hash_family="md5"`` (r11): hash i becomes the affine permutation
+    ``hash_family="md5"``: hash i becomes the affine permutation
     ``(a_i·(h mod p) + b_i) mod p`` over ``minhash_perm_consts`` — exact
     integer arithmetic a DuckDB oracle reproduces verbatim (and cheaper
     per signature than a rehash: one multiply-add-mod vs a full
@@ -227,9 +279,7 @@ def minhash_banded_pairs(
     one hash-join back to shingle sets for candidates only — cost tracks
     actual collisions, never n².
     """
-    r = num_hashes // bands
-    if bands * r != num_hashes:
-        raise ValueError("num_hashes must be divisible by bands")
+    _rows_per_band(num_hashes, bands)  # fail before anything is persisted
     # fan_out: the shingle build + 32 min-hash folds are per-token CPU
     # that dwarfs row bytes, and a small parquet reads as 1-2 row groups
     # — without this the ENTIRE signature pipeline (and, because it is
@@ -238,16 +288,7 @@ def minhash_banded_pairs(
     # the corpus-scale case.
     from ..session import fan_out
 
-    docs = fan_out(docs)
-    # hash each shingle string to a long ONCE; every downstream pass
-    # (32 min-hashes, the exact-Jaccard set ops) operates on longs.
-    # Set semantics survive w.h.p. (64-bit collisions ~ n²/2⁶⁴).
-    sh = ngram_shingles(docs.select(id_col, text_col), text_col, n).select(
-        id_col,
-        F.transform("shingles", lambda s: _shingle_hash(s, hash_family)).alias(
-            "shingles"
-        ),
-    )
+    sh = _hashed_shingles(fan_out(docs), id_col, text_col, n, hash_family)
     # cache: the hashed shingle sets feed the signature once and BOTH
     # sides of the candidate re-check; the signature table feeds both
     # sides of the band self-join. Without these the whole
@@ -288,12 +329,9 @@ def band_candidate_pairs(
     """Distinct (id_a, id_b) candidate pairs from classic LSH banding over
     hashed shingle sets ``sh`` (columns: id, ``shingles`` array<long>) —
     the candidate-generation half of ``minhash_banded_pairs``, factored
-    out so other re-checks (containment) can ride the same banding.
-
-    Portable family: the band signature is the '-'-joined min-hash
-    string instead of an xxhash64 fold (band equality is all banding
-    needs; the string form is what the DuckDB dual's ``string_agg``
-    reproduces).
+    out so other re-checks (containment) can ride the same banding. It
+    self-joins the same band rows ``minhash_band_index`` persists
+    (``_band_rows``).
 
     SKEW: nothing in the data bounds a (band_idx, band_sig) bucket — a
     cluster of m near-identical docs shares every band signature, so the
@@ -303,29 +341,13 @@ def band_candidate_pairs(
     the catalog's scales; a corpus with one large duplicate cluster needs
     a bucket-chunked join here, which costs an extra bucket-count
     aggregation on every run."""
-    r = num_hashes // bands
-    if bands * r != num_hashes:
-        raise ValueError("num_hashes must be divisible by bands")
     # persist: the signature table feeds BOTH sides of the band self-join
     # (num_docs x num_hashes longs — bounded; same discipline as
     # minhash_banded_pairs, whose candidate half this is)
     mins = minhash_signatures(
         sh, id_col, num_hashes=num_hashes, seed=seed, hash_family=hash_family
     ).persist()
-    if hash_family == "md5":
-        band_cols = [
-            F.concat_ws("-", *[F.col(f"h{j * r + k}") for k in range(r)])
-            for j in range(bands)
-        ]
-    else:
-        band_cols = [
-            F.xxhash64(F.array(*[F.col(f"h{j * r + k}") for k in range(r)]))
-            for j in range(bands)
-        ]
-    band_rows = mins.select(
-        F.col(id_col),
-        F.posexplode(F.array(*band_cols)).alias("band_idx", "band_sig"),
-    )
+    band_rows = _band_rows(mins, id_col, num_hashes, bands, hash_family)
     return (
         band_rows.alias("a")
         .join(
@@ -384,12 +406,7 @@ def containment_banded_pairs(
     Returns the exact entry's schema (doc_a, doc_b, n_shared,
     containment_a_in_b, containment_b_in_a), pairs kept when EITHER
     direction >= threshold over the candidate set."""
-    sh = ngram_shingles(docs.select(id_col, text_col), text_col, n).select(
-        id_col,
-        F.transform("shingles", lambda s: _shingle_hash(s, hash_family)).alias(
-            "shingles"
-        ),
-    )
+    sh = _hashed_shingles(docs, id_col, text_col, n, hash_family)
     # one corpus-scale projection feeds the signatures, the bottom-k
     # postings, and both sides of the re-check (persist: measured 3x on
     # the banded path; the 100 TB pattern is persisting this to storage)
@@ -622,42 +639,18 @@ def minhash_band_index(
     shuffle). At 100 TB this table is written partitioned/bucketed by
     (band_idx, band_sig) so incremental probes touch only matching
     buckets; text is never needed again. ``band_sig`` is a long for the
-    xxhash64 default, a '-'-joined STRING for the portable md5 family
-    (r11) — probe and index must use the same family."""
-    r = num_hashes // bands
-    if bands * r != num_hashes:
-        raise ValueError("num_hashes must be divisible by bands")
+    xxhash64 default, a '-'-joined STRING for the portable md5 family —
+    probe and index must use the same family."""
     # fan_out: same rationale as minhash_banded_pairs — the shingle +
     # 32-min-hash projection is per-token CPU pinned to the scan's
     # row-group splits on small parquet; no-op at corpus scale.
     from ..session import fan_out
 
-    docs = fan_out(docs)
-    sh = ngram_shingles(docs.select(id_col, text_col), text_col, n).select(
-        id_col,
-        F.transform("shingles", lambda s: _shingle_hash(s, hash_family)).alias(
-            "shingles"
-        ),
-    )
+    sh = _hashed_shingles(fan_out(docs), id_col, text_col, n, hash_family)
     mins = minhash_signatures(
         sh, id_col, num_hashes=num_hashes, seed=seed, hash_family=hash_family
     )
-    if hash_family == "md5":
-        # portable family: '-'-joined STRING signature (band_sig string),
-        # re-derivable in DuckDB — see band_candidate_pairs
-        band_cols = [
-            F.concat_ws("-", *[F.col(f"h{j * r + k}") for k in range(r)])
-            for j in range(bands)
-        ]
-    else:
-        band_cols = [
-            F.xxhash64(F.array(*[F.col(f"h{j * r + k}") for k in range(r)]))
-            for j in range(bands)
-        ]
-    return mins.select(
-        F.col(id_col),
-        F.posexplode(F.array(*band_cols)).alias("band_idx", "band_sig"),
-    )
+    return _band_rows(mins, id_col, num_hashes, bands, hash_family)
 
 
 def incremental_neardup_filter(
@@ -682,24 +675,24 @@ def incremental_neardup_filter(
     map-side hash join — the corpus is never re-shingled, re-hashed, or
     shuffled, and with the index stored bucketed by (band_idx, band_sig)
     only matching buckets are even read. This is the foreachBatch body of
-    the streaming dedup job (streaming/jobs.py::incremental_dedup_batch).
+    the streaming dedup epoch (streaming/jobs.py::apply_dedup_epoch).
 
-    ``new_bands`` (r12 optimization): a caller that ALSO needs the
-    batch's band table (the curation capstone appends the survivors'
-    bands to the persisted index) passes ``minhash_band_index(new_docs)``
-    here, already persisted, so the shingle → 32-min-hash → band
-    projection runs once per batch instead of once per consumer. The
-    caller owns that persist; this function only unpersists the band
-    table it built itself. Must be the same (id, band_idx, band_sig)
-    layout and hash family as the internal build.
+    ``new_bands``: a caller that ALSO needs the batch's band table (the
+    streaming dedup epoch appends the survivors' bands to the persisted
+    index) passes ``minhash_band_index(new_docs)`` here, already
+    persisted, so the shingle → 32-min-hash → band projection runs once
+    per batch instead of once per consumer. The caller owns that
+    persist; this function only unpersists the band table it built
+    itself. Must be the same (id, band_idx, band_sig) layout and hash
+    family as the internal build.
     """
     owns_bands = new_bands is None
     if not owns_bands:
-        # Contract enforcement (r13, ADVICE r12): the banding parameters are
-        # IGNORED when the caller supplies a precomputed band table — a
-        # mismatched (params, new_bands) pair would silently produce wrong
-        # dedup results. Reject non-default banding params, and require the
-        # exact (id, band_idx, band_sig) layout the internal build produces.
+        # The banding parameters are IGNORED when the caller supplies a
+        # precomputed band table, and a mismatched (params, new_bands) pair
+        # would silently produce wrong dedup results. So reject non-default
+        # banding params, and require the exact (id, band_idx, band_sig)
+        # layout the internal build produces.
         if (n, num_hashes, bands, seed, hash_family) != (3, 32, 8, 42, "xxhash64"):
             raise ValueError(
                 "incremental_neardup_filter: banding parameters are ignored "

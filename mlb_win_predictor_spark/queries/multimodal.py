@@ -4,10 +4,7 @@
 md5) and oracle-checked. Every decode/resize/embed/frame-sample entry runs
 a REAL pure-Python+numpy codec (PNG incl. palette/16-bit/Adam7, JPEG
 baseline AND progressive, RIFF/WAVE, animated GIF89a incl. interlace)
-through Arrow-batched map-only mapInPandas — the r6 ``*_stub`` plumbing
-entries were retired in r7 once each had a real-codec successor; the stub
-operators themselves remain in ``operators.multimodal`` (pytest-covered)
-as the documented pattern for codecs this container cannot ship.
+through Arrow-batched map-only mapInPandas (``operators.multimodal``).
 """
 
 from __future__ import annotations

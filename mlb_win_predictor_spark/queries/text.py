@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..functions.ngrams import word_ngrams
+from ..functions.ngrams import hashed_gram_set, word_ngrams
 from ..functions.scalars import md5_int32, stable_round
 from ..operators.indexing import dense_global_index, exact_ntile
 from ..session import fan_out, input_bytes, load_table
@@ -415,7 +415,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     shingles = d.select(
         "doc_id",
-        F.array_distinct(_word_ngrams(F.col("toks"), NGRAM_N)).alias("shingles"),
+        F.array_distinct(word_ngrams(F.col("toks"), NGRAM_N)).alias("shingles"),
     )
     # same shape as ngram_containment_pairs: ONE cached exploded table
     # carrying n_sh, hashed-long join keys (8-byte discipline, counts
@@ -505,7 +505,7 @@ def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     shingles = d.select(
         "doc_id",
-        F.array_distinct(_word_ngrams(F.col("toks"), NGRAM_N)).alias("shingles"),
+        F.array_distinct(word_ngrams(F.col("toks"), NGRAM_N)).alias("shingles"),
     )
     # one exploded table carries the per-doc size with it, and the join
     # key is the xxhash64 of the shingle (the span-dedup family's 8-byte
@@ -1116,12 +1116,6 @@ FROM s
 REP_N = 3
 
 
-# shared implementation (functions/ngrams.py) — the `_word_ngrams` name
-# is kept because the text family, tests, and streaming all import it
-# from here; the guard/optimization history lives on the shared helper.
-_word_ngrams = word_ngrams
-
-
 def ngram_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-document repetition scoring (the Gopher-style
     duplicate-n-gram quality filter of an LLM data pipeline): fraction of
@@ -1129,11 +1123,11 @@ def ngram_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Entirely map-side — n-gram build, distinct, and the ratio are all
     array expressions; no shuffle at any scale. Tokens and grams are
     materialized in staged projections so each is computed once per row
-    (see _word_ngrams)."""
+    (see word_ngrams)."""
     d = load_table(spark, sf_dir, "documents")
     toks = F.split(F.trim(F.col("text")), r"\s+")
     staged = d.select("doc_id", "lang", toks.alias("toks")).select(
-        "doc_id", "lang", _word_ngrams(F.col("toks"), REP_N).alias("grams")
+        "doc_id", "lang", word_ngrams(F.col("toks"), REP_N).alias("grams")
     )
     n_grams = F.col("n_grams")
     n_dup = F.col("n_dup_grams")
@@ -1194,12 +1188,10 @@ def decontamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.split(F.trim(F.col("text")), r"\s+")
     exploded = (
         d.select("doc_id", toks.alias("toks"))
-        .select("doc_id", _word_ngrams(F.col("toks"), DECON_N).alias("grams"))
+        .select("doc_id", word_ngrams(F.col("toks"), DECON_N).alias("grams"))
         .select(
             "doc_id",
-            F.explode(
-                F.array_distinct(F.transform("grams", lambda g: F.xxhash64(g)))
-            ).alias("gram"),
+            F.explode(hashed_gram_set(F.col("grams"))).alias("gram"),
         )
     )
     is_bench = F.pmod(F.col("doc_id"), F.lit(DECON_BENCH_MOD)) == 0
@@ -1255,12 +1247,10 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the shingle build again (8 bytes/gram, ~grams-per-doc × docs rows)
     exploded = (
         d.select("doc_id", toks.alias("toks"))
-        .select("doc_id", _word_ngrams(F.col("toks"), DECON_N).alias("grams"))
+        .select("doc_id", word_ngrams(F.col("toks"), DECON_N).alias("grams"))
         .select(
             "doc_id",
-            F.explode(
-                F.array_distinct(F.transform("grams", lambda g: F.xxhash64(g)))
-            ).alias("gram"),
+            F.explode(hashed_gram_set(F.col("grams"))).alias("gram"),
         )
     ).cache()
     is_bench = F.pmod(F.col("doc_id"), F.lit(DECON_BENCH_MOD)) == 0
@@ -1287,7 +1277,7 @@ def top_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop docs whose most frequent {n}-gram covers too much of the text):
     per doc, the modal word {n}-gram and the fraction of the document's
     characters its occurrences account for. Gram build is map-side
-    (``_word_ngrams``); the mode is one (doc_id, gram) count — a
+    (``word_ngrams``); the mode is one (doc_id, gram) count — a
     partial-agg-friendly shuffle on the doc grain, never corpus-wide —
     and the per-doc argmax is ``max(struct(cnt, gram))`` — lexicographic
     struct order = count desc then gram desc tie-break — a second
@@ -1306,7 +1296,7 @@ def top_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "n_chars",
-            F.explode(_word_ngrams(F.col("toks"), TOPGRAM_N)).alias("gram"),
+            F.explode(word_ngrams(F.col("toks"), TOPGRAM_N)).alias("gram"),
         )
         .groupBy("doc_id", "n_chars", "gram")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
@@ -1414,12 +1404,10 @@ def crossdoc_dup_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.split(F.trim(F.col("text")), r"\s+")
     exploded = (
         d.select("doc_id", toks.alias("toks"))
-        .select("doc_id", _word_ngrams(F.col("toks"), CROSSDOC_N).alias("grams"))
+        .select("doc_id", word_ngrams(F.col("toks"), CROSSDOC_N).alias("grams"))
         .select(
             "doc_id",
-            F.explode(
-                F.array_distinct(F.transform("grams", lambda g: F.xxhash64(g)))
-            ).alias("gram"),
+            F.explode(hashed_gram_set(F.col("grams"))).alias("gram"),
         )
     )
     with_df = exploded.withColumn("df", F.count(F.lit(1)).over(W.partitionBy("gram")))
@@ -1499,14 +1487,12 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = fan_out(load_table(spark, sf_dir, "documents")).select(
         "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks")
     ).filter(F.size(F.col("toks")) >= PREFIX_N)
-    # staged projection (see _word_ngrams): tokens materialized once per
+    # staged projection (see word_ngrams): tokens materialized once per
     # row, never re-split per shingle inside the interpreted HOF lambda
     shingled = d.select(
         "doc_id",
         F.array_sort(
-            F.array_distinct(
-                F.transform(_word_ngrams(F.col("toks"), PREFIX_N), lambda s: F.xxhash64(s))
-            )
+            hashed_gram_set(word_ngrams(F.col("toks"), PREFIX_N))
         ).alias("shingles"),
     )
     # Persist: reused by the df agg, the prefix index, and both sides of
@@ -2149,6 +2135,71 @@ DSIR_BUCKETS = 256  # hashed-feature space: substr(md5(token), 1, 2)
 DSIR_TARGET_SOURCE = "src1"  # stands in for the curated target domain
 
 
+def dsir_bucket() -> Column:
+    """The DSIR feature of token column ``w``, aliased ``b``: the first
+    md5 byte as two hex chars (``DSIR_BUCKETS`` buckets). Every DSIR
+    scorer, batch and stream, buckets through this one expression;
+    DuckDB's md5 yields the same hex digest, so the oracle SQL
+    reproduces it."""
+    return F.substring(F.md5(F.col("w").cast("binary")), 1, 2).alias("b")
+
+
+def _dsir_logweights(toks: DataFrame, scored: Column) -> DataFrame:
+    """(doc_id, n_tokens, dsir_logweight) of the docs whose token rows
+    match ``scored``, under the bucket model trained on ALL of ``toks``
+    (one (doc_id, is_target, w) row per token). The formula is
+    ``dsir_importance_weights``': exact-integer bucket counts, logs
+    applied once, the total 6dp stable-rounded.
+
+    ``kc`` feeds three consumers (bucket model, totals, per-doc sums), so
+    the lazy plan re-runs the tokenize + explode per consumer. A
+    ``kc.persist()`` was A/B'd interleaved at sf0.1 and LOST (weights
+    1.3-1.7s → 1.8-2.3s): materializing the ~(docs × distinct-buckets)
+    row cache costs more than recomputing a codegen'd split at bench
+    scale — the same verdict as kl_divergence_slices' by_cell note. At
+    100 TB, persist (or write) kc once so the corpus is tokenized a
+    single time."""
+    kc = toks.groupBy("doc_id", "is_target", dsir_bucket()).agg(
+        F.count(F.lit(1)).alias("k")
+    )
+    model = kc.groupBy("b").agg(
+        F.sum(F.when(F.col("is_target"), F.col("k")).otherwise(F.lit(0))).alias("t"),
+        F.sum(F.when(~F.col("is_target"), F.col("k")).otherwise(F.lit(0))).alias("r"),
+    ).select(
+        "b",
+        (
+            F.log(F.col("t").cast("double") + 1.0)
+            - F.log(F.col("r").cast("double") + 1.0)
+        ).alias("lr"),
+        "t",
+        "r",
+    )
+    totals = model.agg(
+        (
+            F.log(F.sum("r").cast("double") + F.lit(float(DSIR_BUCKETS)))
+            - F.log(F.sum("t").cast("double") + F.lit(float(DSIR_BUCKETS)))
+        ).alias("norm")
+    )
+    return (
+        kc.filter(scored)
+        .join(F.broadcast(model.select("b", "lr")), "b")
+        .groupBy("doc_id")
+        .agg(
+            F.sum("k").cast("long").alias("n_tokens"),
+            F.sum(F.col("k").cast("double") * F.col("lr")).alias("sum_klr"),
+        )
+        .crossJoin(F.broadcast(totals))
+        .select(
+            "doc_id",
+            "n_tokens",
+            stable_round(
+                F.col("sum_klr") + F.col("n_tokens").cast("double") * F.col("norm"),
+                6,
+            ).alias("dsir_logweight"),
+        )
+    )
+
+
 def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR data selection (Xie et al. 2023, "Data Selection for Language
     Models via Importance Resampling"): score every raw-corpus document
@@ -2184,58 +2235,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("source") == DSIR_TARGET_SOURCE).alias("is_target"),
         F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w"),
     )
-    # NOTE on the kc re-evaluations (r12 A/B, measured NEGATIVE): kc
-    # feeds three consumers (bucket model, totals, per-doc weights), so
-    # this lazy plan re-runs the tokenize+explode per consumer — and the
-    # budget entry's range sampling adds one more. A kc.persist() was
-    # A/B'd interleaved at sf0.1 and LOST (weights 1.3-1.7s → 1.8-2.3s):
-    # materializing the ~(docs × distinct-buckets) row cache costs more
-    # than recomputing a codegen'd split at bench scale — the same
-    # verdict as kl_divergence_slices' by_cell note. At 100 TB, persist
-    # (or write) kc once so the corpus is tokenized a single time.
-    kc = toks.groupBy(
-        "doc_id", "is_target", F.substring(F.md5(F.col("w").cast("binary")), 1, 2).alias("b")
-    ).agg(F.count(F.lit(1)).alias("k"))
-    model = (
-        kc.groupBy("b")
-        .agg(
-            F.sum(F.when(F.col("is_target"), F.col("k")).otherwise(F.lit(0))).alias("t"),
-            F.sum(F.when(~F.col("is_target"), F.col("k")).otherwise(F.lit(0))).alias("r"),
-        )
-        .select(
-            "b",
-            (
-                F.log(F.col("t").cast("double") + 1.0)
-                - F.log(F.col("r").cast("double") + 1.0)
-            ).alias("lr"),
-            "t",
-            "r",
-        )
-    )
-    totals = model.agg(
-        (
-            F.log(F.sum("r").cast("double") + F.lit(float(DSIR_BUCKETS)))
-            - F.log(F.sum("t").cast("double") + F.lit(float(DSIR_BUCKETS)))
-        ).alias("norm")
-    )
-    return (
-        kc.filter(~F.col("is_target"))
-        .join(F.broadcast(model.select("b", "lr")), "b")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("k").cast("long").alias("n_tokens"),
-            F.sum(F.col("k").cast("double") * F.col("lr")).alias("sum_klr"),
-        )
-        .crossJoin(F.broadcast(totals))
-        .select(
-            "doc_id",
-            "n_tokens",
-            stable_round(
-                F.col("sum_klr") + F.col("n_tokens").cast("double") * F.col("norm"),
-                6,
-            ).alias("dsir_logweight"),
-        )
-    )
+    return _dsir_logweights(toks, ~F.col("is_target"))
 
 
 DSIR_SELECT_BUDGET = 2000  # tokens — binds at every test SF
@@ -2304,9 +2304,7 @@ def dsir_bucket_model(
         F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w"),
     )
     model = (
-        toks.groupBy(
-            F.substring(F.md5(F.col("w").cast("binary")), 1, 2).alias("b")
-        )
+        toks.groupBy(dsir_bucket())
         .agg(
             F.sum(F.when(F.col("is_target"), 1).otherwise(0)).alias("t"),
             F.sum(F.when(~F.col("is_target"), 1).otherwise(0)).alias("r"),
@@ -2454,6 +2452,22 @@ def _llm_pipe_base(spark: SparkSession, sf_dir: str):
     return toked, flagged, is_bench
 
 
+def _llm_gram5(df: DataFrame) -> DataFrame:
+    """(doc_id, gram): the capstones' hashed distinct word-5-gram rows of
+    a frame with a ``toks`` array column."""
+    return df.select(
+        "doc_id",
+        F.explode(hashed_gram_set(word_ngrams(F.col("toks"), 5))).alias("gram"),
+    )
+
+
+def _llm_bench_grams(toked: DataFrame, is_bench: Column) -> DataFrame:
+    """The benchmark slice's distinct hashed 5-grams — the decontamination
+    set of every capstone: the batch ones broadcast it into an exact join,
+    the stream one compiles it into a Bloom bitset."""
+    return _llm_gram5(toked.filter(is_bench)).select("gram").distinct()
+
+
 def _llm_pipe_finish(
     toked: DataFrame,
     flagged: DataFrame,
@@ -2471,17 +2485,9 @@ def _llm_pipe_finish(
     to ``(frame, order_cols)``, letting a variant join a per-doc ranking
     signal and spend each source's budget in that order; None keeps the
     deterministic md5-hash order (``token_budget_sample``'s rule)."""
-    gram5 = lambda df: df.select(  # noqa: E731
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.transform(_word_ngrams(F.col("toks"), 5), lambda g: F.xxhash64(g))
-            )
-        ).alias("gram"),
-    )
-    bench_grams = gram5(toked.filter(is_bench)).select("gram").distinct()
+    bench_grams = _llm_bench_grams(toked, is_bench)
     dirty = (
-        gram5(flagged.filter(F.col(keep_col)))
+        _llm_gram5(flagged.filter(F.col(keep_col)))
         .join(F.broadcast(bench_grams), "gram")
         .select("doc_id")
         .distinct()
@@ -2709,65 +2715,25 @@ def llm_dataset_pipeline_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     toked, flagged, is_bench = _llm_pipe_base(spark, sf_dir)
 
     def dsir_order(c: DataFrame):
-        kc = (
-            flagged.select(
-                "doc_id",
-                (F.col("source") == DSIR_TARGET_SOURCE).alias("is_target"),
-                F.explode("toks").alias("w"),
-            )
-            .groupBy(
-                "doc_id",
-                "is_target",
-                F.substring(F.md5(F.col("w").cast("binary")), 1, 2).alias("b"),
-            )
-            .agg(F.count(F.lit(1)).alias("k"))
+        toks = flagged.select(
+            "doc_id",
+            (F.col("source") == DSIR_TARGET_SOURCE).alias("is_target"),
+            F.explode("toks").alias("w"),
         )
-        model = kc.groupBy("b").agg(
-            F.sum(F.when(F.col("is_target"), F.col("k")).otherwise(F.lit(0))).alias("t"),
-            F.sum(F.when(~F.col("is_target"), F.col("k")).otherwise(F.lit(0))).alias("r"),
-        ).select(
-            "b",
-            (
-                F.log(F.col("t").cast("double") + 1.0)
-                - F.log(F.col("r").cast("double") + 1.0)
-            ).alias("lr"),
-            "t",
-            "r",
-        )
-        totals = model.agg(
-            (
-                F.log(F.sum("r").cast("double") + F.lit(float(DSIR_BUCKETS)))
-                - F.log(F.sum("t").cast("double") + F.lit(float(DSIR_BUCKETS)))
-            ).alias("norm")
-        )
-        wts = (
-            kc.join(F.broadcast(model.select("b", "lr")), "b")
-            .groupBy("doc_id")
-            .agg(
-                F.sum("k").cast("long").alias("_n"),
-                F.sum(F.col("k").cast("double") * F.col("lr")).alias("_sklr"),
-            )
-            .crossJoin(F.broadcast(totals))
-            .select(
-                "doc_id",
-                stable_round(
-                    F.col("_sklr") + F.col("_n").cast("double") * F.col("norm"), 6
-                ).alias("_lw"),
-            )
-        )
-        # LEFT join (r11, from r10 advice): wts only covers docs that
-        # produced ≥1 token row — explode drops NULL-text documents —
-        # so an inner join would silently remove those docs from EVERY
-        # rollup counter (n_input onward), breaking the shared-stage
-        # equality with v1 that the pytest pins. A NULL-text doc can
-        # never be `clean`, so its rank just needs to be deterministic:
-        # coalesce the per-token weight to a sentinel below any real
-        # log-weight (sorts last), doc_id tiebreak. SQL dual mirrors
-        # the LEFT JOIN + COALESCE exactly.
+        wts = _dsir_logweights(toks, F.lit(True)).select("doc_id", "dsir_logweight")
+        # LEFT join: wts only covers docs that produced ≥1 token row —
+        # explode drops NULL-text documents — so an inner join would
+        # silently remove those docs from EVERY rollup counter (n_input
+        # onward), breaking the shared-stage equality with v1 that the
+        # pytest pins. A NULL-text doc can never be `clean`, so its rank
+        # just needs to be deterministic: coalesce the per-token weight to
+        # a sentinel below any real log-weight (sorts last), doc_id
+        # tiebreak. SQL dual mirrors the LEFT JOIN + COALESCE exactly.
         c2 = c.join(wts, "doc_id", "left")
         order = [
             F.coalesce(
-                F.col("_lw") / F.col("n_toks").cast("double"), F.lit(-1e300)
+                F.col("dsir_logweight") / F.col("n_toks").cast("double"),
+                F.lit(-1e300),
             ).desc(),
             F.col("doc_id").asc(),
         ]
@@ -2856,8 +2822,7 @@ FROM b GROUP BY source
 def llm_dataset_pipeline_stream(
     spark: SparkSession, sf_dir: str, dsir: bool = False
 ) -> DataFrame:
-    """Capstone, STREAMING form (r11, r10 verdict #5): the incremental
-    curation pipeline a 100 TB ingest actually runs — quality gate →
+    """Capstone, STREAMING form: the incremental curation pipeline a 100 TB ingest actually runs — quality gate →
     incremental near-dedup against the persisted MinHash band index →
     Bloom benchmark decontamination → per-source token budget — executed
     HERE as a real Structured Streaming query
@@ -2867,10 +2832,10 @@ def llm_dataset_pipeline_stream(
     epochs.
 
     Stage semantics are the batch entries' own code shared by call:
-    ``llm_quality_expr`` (stage 1), ``incremental_neardup_filter`` /
-    ``minhash_band_index`` (stage 2 — the ``incremental_dedup_stream``
-    loop), ``_bloom_clean_docs`` (stage 3 — the ``decontaminate_stream``
-    gate), arrival-ordered budget (stage 4; the batch capstones, holding
+    ``llm_quality_expr`` (stage 1), ``apply_dedup_epoch`` (stage 2 — the
+    ``incremental_dedup_stream`` epoch), ``_bloom_clean_docs`` (stage 3 —
+    the ``decontaminate_stream`` gate, probing the batch capstones'
+    bench-gram set), arrival-ordered budget (stage 4; the batch capstones, holding
     the whole corpus, can order by global hash / DSIR weight instead).
     Dedup here is banding-only (the incremental index probe) and
     decontamination is Bloom-FPR-bounded, so counts are NOT expected to
@@ -2880,9 +2845,9 @@ def llm_dataset_pipeline_stream(
 
     Rows-only entry (a streaming query with external table state has no
     DuckDB dual). State/checkpoint live in a fresh mkdtemp per call and
-    are DELETED before returning (r11 review: the kept-corpus copy +
-    band index + checkpoint are corpus-sized — leaking one per bench/
-    correctness invocation accumulates unboundedly in /tmp); the final
+    are DELETED before returning (the kept-corpus copy + band index +
+    checkpoint are corpus-sized — leaking one per bench/correctness
+    invocation accumulates unboundedly in the temp dir); the final
     rollup is collected first (bounded: one row per source per epoch)
     and returned as a local DataFrame, so nothing lazy outlives the
     scratch dir."""
@@ -2894,23 +2859,15 @@ def llm_dataset_pipeline_stream(
 
     d = load_table(spark, sf_dir, "documents")
     is_bench = F.pmod(F.col("doc_id"), F.lit(LLM_PIPE_BENCH_MOD)) == 0
-    bench_grams = (
-        d.filter(is_bench)
-        .select(F.split(F.trim(F.col("text")), r"\s+").alias("toks"))
-        .select(
-            F.explode(
-                F.array_distinct(
-                    F.transform(_word_ngrams(F.col("toks"), 5), lambda g: F.xxhash64(g))
-                )
-            ).alias("gram")
-        )
-        .distinct()
+    bench_grams = _llm_bench_grams(
+        d.select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks")),
+        is_bench,
     )
-    # DSIR variant (r12): train the bucket model batch-side on the
-    # NON-BENCH corpus (v3's eval-must-not-influence-selection rule) and
-    # hand it to the stream as a 2-KB literal. Trained BEFORE any scratch
-    # state is allocated (r12 review: a training failure after mkdtemp /
-    # broadcast would leak both — the cleanup sits in the finally below).
+    # DSIR variant: train the bucket model batch-side on the NON-BENCH
+    # corpus (v3's eval-must-not-influence-selection rule) and hand it to
+    # the stream as a 2-KB literal. Trained BEFORE any scratch state is
+    # allocated: a training failure after mkdtemp / broadcast would leak
+    # both, since the cleanup sits in the finally below.
     model = (
         dsir_bucket_model(spark, sf_dir, docs=d.filter(~is_bench)) if dsir else None
     )
@@ -2981,8 +2938,8 @@ def llm_dataset_pipeline_stream(
 
 
 def llm_dataset_pipeline_stream_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Capstone, STREAMING form with DSIR-ORDERED budget spending (r12,
-    r11 verdict #7): identical scaffolding and stages to
+    """Capstone, STREAMING form with DSIR-ORDERED budget spending:
+    identical scaffolding and stages to
     ``llm_dataset_pipeline_stream`` (shared BY CALL — the ``dsir`` flag
     only swaps the spending window's order), with each epoch's
     per-source budget spent in descending DSIR per-token importance
@@ -3484,14 +3441,9 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     e = toked.select(
         "source",
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    _word_ngrams(F.col("toks"), CROSSDOC_N),
-                    lambda g: F.xxhash64(g),
-                )
-            )
-        ).alias("g"),
+        F.explode(hashed_gram_set(word_ngrams(F.col("toks"), CROSSDOC_N))).alias(
+            "g"
+        ),
     )
     srcs = (
         e.groupBy("g")

@@ -304,6 +304,48 @@ def running_user_totals_tws(events: DataFrame) -> DataFrame:
     )
 
 
+# the persisted MinHash band index: one row per LSH band per kept doc
+DEDUP_INDEX_SCHEMA = "doc_id long, band_idx int, band_sig long"
+
+
+def apply_dedup_epoch(
+    docs: DataFrame, epoch_id: int, index_path: str
+) -> tuple[DataFrame, DataFrame]:
+    """One epoch of incremental near-dedup — the foreachBatch step of
+    ``incremental_dedup_stream`` and ``llm_curation_stream``, module-level
+    so replay is directly testable. Reads the band index of every
+    committed epoch BELOW ``epoch_id``, bands ``docs`` (doc_id, text)
+    ONCE, keeps the docs ``incremental_neardup_filter`` passes (no band
+    collision with the index or with a smaller id in the batch), and
+    overwrites ``index_path/epoch=N`` with the survivors' bands.
+
+    The survivors' bands are the batch bands semi-joined to the surviving
+    ids (banding is deterministic per doc), so the shingle → 32-min-hash
+    → band projection runs once per epoch; re-banding the survivors from
+    text measured ~6-22s of pure recompute per epoch at sf0.1.
+
+    Returns (kept, bands), both persisted: the caller consumes ``kept``
+    and unpersists both in its ``finally``."""
+    from ..operators.dedup import incremental_neardup_filter, minhash_band_index
+
+    index = read_epoch_union(
+        docs.sparkSession, index_path, DEDUP_INDEX_SCHEMA, below=epoch_id
+    )
+    bands = minhash_band_index(docs).persist()
+    kept = None
+    try:
+        kept = incremental_neardup_filter(index, docs, new_bands=bands).persist()
+        bands.join(kept.select("doc_id"), "doc_id", "leftsemi").write.mode(
+            "overwrite"
+        ).parquet(f"{index_path}/epoch={epoch_id}")
+    except BaseException:
+        for df in (bands, kept):
+            if df is not None:
+                df.unpersist()
+        raise
+    return kept, bands
+
+
 def incremental_dedup_stream(
     new_docs: DataFrame, index_path: str, kept_path: str, checkpoint: str
 ):
@@ -326,24 +368,14 @@ def incremental_dedup_stream(
     duplicates, with no marker race window. Readers take the union of
     committed epochs (``read_epoch_union``), which IS append semantics,
     just commit-aware."""
-    from ..operators.dedup import incremental_neardup_filter, minhash_band_index
 
     def dedup_batch(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
-        index = read_epoch_union(
-            spark,
-            index_path,
-            "doc_id long, band_idx int, band_sig long",
-            below=epoch_id,
-        )
-        kept = incremental_neardup_filter(index, batch).persist()
+        kept, bands = apply_dedup_epoch(batch, epoch_id, index_path)
         try:
-            minhash_band_index(kept).write.mode("overwrite").parquet(
-                f"{index_path}/epoch={epoch_id}"
-            )
             kept.write.mode("overwrite").parquet(f"{kept_path}/epoch={epoch_id}")
         finally:
             kept.unpersist()
+            bands.unpersist()
 
     return (
         new_docs.writeStream.foreachBatch(dedup_batch)
@@ -400,17 +432,13 @@ def _bloom_clean_docs(batch: DataFrame, bits_broadcast, n: int) -> DataFrame:
     every row regardless of an enclosing when(), so a NULL gram from a
     sub-n-token doc would reach the UDF. Docs with no grams have nothing
     to probe and are kept via the left join's coalesce."""
+    from ..functions.ngrams import hashed_gram_set, word_ngrams
     from ..operators.bloom import bloom_might_contain
-    from ..queries.text import _word_ngrams
 
     toks = F.split(F.trim(F.col("text")), r"\s+")
     grams = batch.select("doc_id", toks.alias("toks")).select(
         "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.transform(_word_ngrams(F.col("toks"), n), lambda g: F.xxhash64(g))
-            )
-        ).alias("gram"),
+        F.explode(hashed_gram_set(word_ngrams(F.col("toks"), n))).alias("gram"),
     )
     hits = (
         grams.filter(bloom_might_contain("gram", bits_broadcast))
@@ -421,6 +449,40 @@ def _bloom_clean_docs(batch: DataFrame, bits_broadcast, n: int) -> DataFrame:
         batch.join(hits, "doc_id", "left")
         .filter(F.coalesce(F.col("n_hits"), F.lit(0)) == 0)
         .drop("n_hits")
+    )
+
+
+def _dsir_token_scores(docs: DataFrame, bucket_logratios: dict[str, float]) -> DataFrame:
+    """(doc_id, n_tokens, sum_klr) of each doc of ``docs`` (doc_id, text)
+    against a batch-trained DSIR bucket model: its token count and
+    Σ_b k_b·lr_b. The ≤256-entry model ships as a ``create_map``
+    LITERAL, so the plan is tokenize → md5-bucket → map lookup → doc
+    rollup: map-side except the doc-grain aggregations, no Python UDF.
+    Buckets unseen in training fall back to the smoothed empty-bucket
+    ratio ln(1/1) = 0.0, matching the batch model's full-outer +
+    coalesce(0) semantics. Callers add the ``n·norm`` term and divide
+    as their own outputs need."""
+    from ..queries.text import dsir_bucket
+
+    items: list = []
+    for b, lr in sorted(bucket_logratios.items()):
+        items.append(F.lit(b))
+        items.append(F.lit(float(lr)))
+    lr_map = F.create_map(*items) if items else F.create_map()
+    return (
+        docs.select(
+            "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w")
+        )
+        .select("doc_id", dsir_bucket())
+        .groupBy("doc_id", "b")
+        .agg(F.count(F.lit(1)).alias("k"))
+        .groupBy("doc_id")
+        .agg(
+            F.sum("k").cast("long").alias("n_tokens"),
+            F.sum(
+                F.col("k").cast("double") * F.coalesce(lr_map[F.col("b")], F.lit(0.0))
+            ).alias("sum_klr"),
+        )
     )
 
 
@@ -435,10 +497,10 @@ def llm_curation_stream(
     gram_n: int = 5,
     dsir_model: tuple[dict[str, float], float] | None = None,
 ):
-    """The STREAMING LLM-curation capstone (r11, r10 verdict #5): the
-    incremental dual of the batch ``llm_dataset_pipeline*`` entries,
-    composed from the gates this module already ships one-by-one — ONE
-    foreachBatch body runs, in stage order per micro-batch:
+    """The STREAMING LLM-curation capstone: the incremental dual of the
+    batch ``llm_dataset_pipeline*`` entries, composed from the gates this
+    module already ships one-by-one — ONE foreachBatch body runs, in
+    stage order per micro-batch:
 
     1. **quality** — ``queries.text.llm_quality_expr`` (the batch
        capstone's exact rule, shared by call);
@@ -446,8 +508,8 @@ def llm_curation_stream(
        persisted MinHash band index of everything kept by EARLIER
        epochs (``operators.dedup.incremental_neardup_filter``: batch
        bands broadcast, corpus never re-shingled), then their bands are
-       appended so later batches dedup against them — exactly
-       ``incremental_dedup_stream``'s loop;
+       appended so later batches dedup against them — the same
+       ``apply_dedup_epoch`` ``incremental_dedup_stream`` runs;
     3. **Bloom decontamination** — ``_bloom_clean_docs`` zero-hit keep
        against the broadcast bench-gram bitset (exactly
        ``decontaminate_stream``'s gate);
@@ -460,19 +522,18 @@ def llm_curation_stream(
        (``tokens_clean`` in the stats table), NOT admitted tokens —
        carrying only admitted tokens would un-charge every
        budget-rejected doc at each epoch boundary, making the kept set
-       depend on micro-batch boundaries (caught by this round's
-       review; pinned by the over-budget-then-epoch-boundary case in
-       tests/test_streaming.py). Arrival order is the production
-       semantics — a 100 TB ingest stops admitting a source when its
-       budget fills — where the BATCH capstone, holding the whole
-       corpus, can afford a global md5-hash (v1) or DSIR (v3) spending
-       order; the stream==batch parity test therefore feeds epochs in
-       doc_id order so both orders coincide.
+       depend on micro-batch boundaries (pinned by the
+       over-budget-then-epoch-boundary case in tests/test_streaming.py).
+       Arrival order is the production semantics — a 100 TB ingest
+       stops admitting a source when its budget fills — where the BATCH
+       capstone, holding the whole corpus, can afford a global md5-hash
+       (v1) or DSIR (v3) spending order; the stream==batch parity test
+       therefore feeds epochs in doc_id order so both orders coincide.
 
-       ``dsir_model=(bucket_logratios, norm)`` (r12, r11 verdict #7)
-       upgrades the WITHIN-EPOCH spending order to descending DSIR
-       per-token importance — each epoch's clean docs are scored
-       against the batch-trained hashed-unigram bucket model (the
+       ``dsir_model=(bucket_logratios, norm)`` upgrades the WITHIN-EPOCH
+       spending order to descending DSIR per-token importance — each
+       epoch's clean docs are scored against the batch-trained
+       hashed-unigram bucket model (``_dsir_token_scores``, the
        ``dsir_select_stream`` literal-map plan, batch v3's exact float
        discipline: 6dp-rounded total log-weight, per-token order,
        doc_id tiebreak) and the budget window spends best-first inside
@@ -505,18 +566,7 @@ def llm_curation_stream(
     Nothing scales with corpus size except the index scan, which a
     bucketed-by-(band_idx, band_sig) layout prunes to matching buckets."""
     from ..functions.scalars import stable_round
-    from ..operators.dedup import incremental_neardup_filter, minhash_band_index
     from ..queries.text import llm_quality_expr
-
-    lr_map = None
-    dsir_norm = 0.0
-    if dsir_model is not None:
-        lrs, dsir_norm = dsir_model
-        items: list = []
-        for bkt, lr in sorted(lrs.items()):
-            items.append(F.lit(bkt))
-            items.append(F.lit(float(lr)))
-        lr_map = F.create_map(*items) if items else F.create_map()
 
     def curate(batch: DataFrame, epoch_id: int) -> None:
         spark = batch.sparkSession
@@ -531,44 +581,28 @@ def llm_curation_stream(
         # weighting stage below re-splits clean docs' text: carrying the
         # array through the persisted ``deduped`` frame measured 15-20%
         # SLOWER at sf0.1 (two interleaved single-JVM A/Bs, both leg
-        # orders — PLANS.md r12) — serializing token arrays into the
-        # persist costs more than one regex split over the clean subset,
-        # the same result as the batch ``toked``-cache A/B.
-        # ONE materialized copy of the flagged batch (r12 optimization):
-        # quality (→ banding AND the dedup anti-join) and the stats
-        # rollup each re-evaluated the scan + token split + quality
-        # expressions — three corpus-grain passes per epoch for one
-        # micro-batch of data. Batch-sized by construction, so the
-        # persist is bounded exactly like ``deduped``/``selected``.
+        # orders) — serializing token arrays into the persist costs more
+        # than one regex split over the clean subset, the same result as
+        # the batch ``toked``-cache A/B.
+        # ONE materialized copy of the flagged batch: quality (→ banding
+        # AND the dedup anti-join) and the stats rollup would otherwise
+        # each re-evaluate the scan + token split + quality expressions —
+        # three corpus-grain passes per epoch for one micro-batch of
+        # data. Batch-sized by construction, so the persist is bounded
+        # exactly like ``deduped``/``selected``.
         flagged = bands_q = deduped = clean = selected = None
         try:
             flagged = toked.select(
                 "doc_id", "source", "text", n_tok.cast("long").alias("n_toks"), q.alias("q")
             ).persist()
             quality = flagged.filter("q").drop("q")
-
-            index = read_epoch_union(
-                spark,
-                index_path,
-                "doc_id long, band_idx int, band_sig long",
-                below=epoch_id,
-            )
-            # Band the quality batch ONCE (r12 optimization): the probe
-            # inside ``incremental_neardup_filter`` and the index append
-            # below both need the batch's band table, and the old shape ran
-            # the shingle → 32-min-hash → band projection twice per epoch
-            # (the append re-banded the survivors from text — measured ~6-22s
-            # of pure recompute per epoch at sf0.1). The banding is
-            # deterministic per doc, so the survivors' bands are exactly the
-            # quality bands semi-joined to the surviving ids.
-            bands_q = minhash_band_index(quality).persist()
-            deduped = incremental_neardup_filter(
-                index, quality, new_bands=bands_q
-            ).persist()
-            # Persist the Bloom-clean survivors (r12 optimization): the DSIR
-            # weighting, the budget window, and the stats rollup each
-            # consumed ``clean`` — re-running the gram explode + ArrowEval
-            # Bloom probe chain up to three times per epoch.
+            # the index write is the epoch's first write, before any stage
+            # below consumes the survivors
+            deduped, bands_q = apply_dedup_epoch(quality, epoch_id, index_path)
+            # Persist the Bloom-clean survivors: the DSIR weighting, the
+            # budget window, and the stats rollup each consume ``clean`` —
+            # otherwise re-running the gram explode + ArrowEval Bloom probe
+            # chain up to three times per epoch.
             clean = _bloom_clean_docs(deduped, bits_broadcast, gram_n).persist()
 
             spent = read_epoch_union(
@@ -583,39 +617,20 @@ def llm_curation_stream(
             prior = spent.groupBy("source").agg(
                 F.sum("tokens_clean").alias("_spent_before")
             )
-            if lr_map is not None:
+            if dsir_model is not None:
                 # DSIR within-epoch spending order: score the epoch's clean
-                # docs against the broadcast-literal bucket model (batch
-                # v3's exact grain — 6dp-rounded total log-weight, ordered
-                # per-token, doc_id tiebreak; LEFT join + sentinel so a
-                # token-less doc still sorts deterministically last)
-                wts = (
-                    clean.select(
-                        "doc_id",
-                        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w"),
-                    )
-                    .select(
-                        "doc_id",
-                        F.substring(F.md5(F.col("w").cast("binary")), 1, 2).alias("b"),
-                    )
-                    .groupBy("doc_id", "b")
-                    .agg(F.count(F.lit(1)).alias("k"))
-                    .groupBy("doc_id")
-                    .agg(
-                        F.sum("k").cast("long").alias("_n"),
-                        F.sum(
-                            F.col("k").cast("double")
-                            * F.coalesce(lr_map[F.col("b")], F.lit(0.0))
-                        ).alias("_sklr"),
-                    )
-                    .select(
-                        "doc_id",
-                        stable_round(
-                            F.col("_sklr")
-                            + F.col("_n").cast("double") * F.lit(float(dsir_norm)),
-                            6,
-                        ).alias("_lw"),
-                    )
+                # docs against the literal bucket model (batch v3's exact
+                # grain — 6dp-rounded total log-weight, ordered per-token,
+                # doc_id tiebreak; LEFT join + sentinel so a token-less doc
+                # still sorts deterministically last)
+                lrs, dsir_norm = dsir_model
+                wts = _dsir_token_scores(clean, lrs).select(
+                    "doc_id",
+                    stable_round(
+                        F.col("sum_klr")
+                        + F.col("n_tokens").cast("double") * F.lit(float(dsir_norm)),
+                        6,
+                    ).alias("_lw"),
                 )
                 spend_base = clean.join(wts, "doc_id", "left")
                 spend_order = [
@@ -642,13 +657,7 @@ def llm_curation_stream(
                 .select("doc_id", "source", "text", "n_toks")
                 .persist()
             )
-            # per-epoch writes, all overwrite — idempotent on replay.
-            # Survivor bands = the already-computed quality bands
-            # restricted to surviving ids (banding is deterministic per
-            # row), NOT a re-banding of the survivors from text.
-            bands_q.join(
-                deduped.select("doc_id"), "doc_id", "leftsemi"
-            ).write.mode("overwrite").parquet(f"{index_path}/epoch={epoch_id}")
+            # per-epoch writes, all overwrite — idempotent on replay
             stats = (
                 flagged.groupBy("source")
                 .agg(
@@ -699,10 +708,10 @@ def llm_curation_stream(
                 f"{kept_path}/epoch={epoch_id}"
             )
         finally:
-            # unpersist-if-built (r13, ADVICE r12): an exception between a
-            # persist() and the terminal writes (e.g. in the eager
-            # localCheckpoint inside incremental_neardup_filter) must not
-            # leak cached blocks across epochs of a long-running stream.
+            # unpersist-if-built: an exception between a persist() and the
+            # terminal writes must not leak cached blocks across epochs of
+            # a long-running stream (``apply_dedup_epoch`` releases its own
+            # persists when it fails).
             for _df in (flagged, bands_q, deduped, clean, selected):
                 if _df is not None:
                     _df.unpersist()
@@ -722,7 +731,7 @@ def dsir_select_stream(
     kept_path: str,
     checkpoint: str,
 ):
-    """Streaming ingest DSIR gate (r9 — the streaming dual of the
+    """Streaming ingest DSIR gate (the streaming dual of the
     ``dsir_importance_weights`` catalog entry): each micro-batch of
     documents is scored against a BATCH-TRAINED hashed-unigram bucket
     model (Xie et al. 2023) and only documents whose per-token importance
@@ -743,44 +752,14 @@ def dsir_select_stream(
     the same one-final-arithmetic float discipline as the batch entry,
     so a doc scores the SAME whether it arrives in a batch backfill or
     through this gate (pinned by tests/test_streaming.py)."""
-    items: list = []
-    for b, lr in sorted(bucket_logratios.items()):
-        items.append(F.lit(b))
-        items.append(F.lit(float(lr)))
-    lr_map = F.create_map(*items) if items else F.create_map()
 
     def gate(batch: DataFrame, epoch_id: int) -> None:
-        toks = F.split(F.trim(F.col("text")), r"\s+")
-        kb = (
-            batch.select("doc_id", F.explode(toks).alias("w"))
-            .select(
-                "doc_id",
-                F.substring(F.md5(F.col("w").cast("binary")), 1, 2).alias("b"),
-            )
-            .groupBy("doc_id", "b")
-            .agg(F.count(F.lit(1)).alias("k"))
-        )
-        scored = (
-            kb.select(
-                "doc_id",
-                "k",
-                # buckets unseen in training fall back to the smoothed
-                # empty-bucket ratio ln(1/1) = 0.0, matching the batch
-                # model's full-outer + coalesce(0) semantics
-                (F.col("k").cast("double") * F.coalesce(lr_map[F.col("b")], F.lit(0.0))).alias("klr"),
-            )
-            .groupBy("doc_id")
-            .agg(
-                F.sum("k").cast("long").alias("n_tokens"),
-                F.sum("klr").alias("sum_klr"),
-            )
-            .select(
-                "doc_id",
-                (
-                    (F.col("sum_klr") + F.col("n_tokens").cast("double") * F.lit(float(norm)))
-                    / F.col("n_tokens").cast("double")
-                ).alias("per_token_logweight"),
-            )
+        scored = _dsir_token_scores(batch, bucket_logratios).select(
+            "doc_id",
+            (
+                (F.col("sum_klr") + F.col("n_tokens").cast("double") * F.lit(float(norm)))
+                / F.col("n_tokens").cast("double")
+            ).alias("per_token_logweight"),
         )
         kept = (
             batch.join(scored, "doc_id", "left")

@@ -172,28 +172,34 @@ def test_incremental_dedup_stream_across_batches(spark, tmp_path):
     assert spark.read.parquet(str(tmp_path / "kept")).count() == kept_rows
     assert spark.read.parquet(str(tmp_path / "index")).count() == index_rows
 
-    # crash-window replay: re-run epoch 1's body directly against the
-    # committed state (as after a crash between its writes and the
-    # checkpoint commit) — kept/index must be row-identical after
-    from mlb_win_predictor_spark.streaming.jobs import read_epoch_union
-
-    b1_df = spark.createDataFrame(b1)
-    from mlb_win_predictor_spark.operators.dedup import (
-        incremental_neardup_filter,
-        minhash_band_index,
+    # crash-window replay: re-run epoch 1 directly against the committed
+    # state (as after a crash between its writes and the checkpoint
+    # commit) — kept/index must be row-identical after
+    from mlb_win_predictor_spark.operators.dedup import minhash_band_index
+    from mlb_win_predictor_spark.streaming.jobs import (
+        DEDUP_INDEX_SCHEMA,
+        apply_dedup_epoch,
+        read_epoch_union,
     )
 
-    idx_below = read_epoch_union(
-        spark, str(tmp_path / "index"), "doc_id long, band_idx int, band_sig long", below=1
+    kept_replay, bands = apply_dedup_epoch(
+        spark.createDataFrame(b1), 1, str(tmp_path / "index")
     )
-    kept_replay = incremental_neardup_filter(idx_below, b1_df)
-    minhash_band_index(kept_replay).write.mode("overwrite").parquet(
-        str(tmp_path / "index") + "/epoch=1"
-    )
-    kept_replay.write.mode("overwrite").parquet(str(tmp_path / "kept") + "/epoch=1")
+    try:
+        kept_replay.write.mode("overwrite").parquet(str(tmp_path / "kept") + "/epoch=1")
+    finally:
+        kept_replay.unpersist()
+        bands.unpersist()
     assert spark.read.parquet(str(tmp_path / "kept")).count() == kept_rows
     assert spark.read.parquet(str(tmp_path / "index")).count() == index_rows
     assert {r.doc_id for r in spark.read.parquet(str(tmp_path / "kept")).collect()} == kept
+    # the index holds exactly the bands of the kept docs: banding each
+    # batch once writes what re-banding the survivors from text would
+    index = read_epoch_union(spark, str(tmp_path / "index"), DEDUP_INDEX_SCHEMA)
+    kept_docs = read_epoch_union(spark, str(tmp_path / "kept"), "doc_id long, text string")
+    assert sorted(map(tuple, index.collect())) == sorted(
+        map(tuple, minhash_band_index(kept_docs).collect())
+    )
 
 
 def test_foreach_batch_upsert(spark, tmp_path_factory):
@@ -868,19 +874,13 @@ def _llm_curation_fixture_rows():
 
 
 def _llm_curation_bits(spark, bench_sent):
+    from mlb_win_predictor_spark.functions.ngrams import hashed_gram_set, word_ngrams
     from mlb_win_predictor_spark.operators.bloom import bloom_build
-    from mlb_win_predictor_spark.queries.text import _word_ngrams
 
     bench = (
         spark.createDataFrame([(bench_sent,)], "text string")
         .select(F.split(F.trim(F.col("text")), r"\s+").alias("toks"))
-        .select(
-            F.explode(
-                F.array_distinct(
-                    F.transform(_word_ngrams(F.col("toks"), 5), lambda g: F.xxhash64(g))
-                )
-            ).alias("gram")
-        )
+        .select(F.explode(hashed_gram_set(word_ngrams(F.col("toks"), 5))).alias("gram"))
     )
     return spark.sparkContext.broadcast(bloom_build(bench))
 
