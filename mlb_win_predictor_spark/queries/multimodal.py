@@ -5,10 +5,15 @@ md5) and oracle-checked. Every decode/resize/embed/frame-sample entry runs
 a REAL pure-Python+numpy codec (PNG incl. palette/16-bit/Adam7, JPEG
 baseline AND progressive, RIFF/WAVE, animated GIF89a incl. interlace)
 through Arrow-batched map-only mapInPandas (``operators.multimodal``).
+Each of those entries builds its synthetic corpus with
+``_synthetic_media`` from a ``(doc_id, text) -> bytes`` payload function
+nested in the entry, so it ships by value (the by-value rule in
+``operators.multimodal``'s docstring).
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,25 +53,67 @@ FROM media GROUP BY mime
 """
 
 
+def _make_text_tiler():
+    """Build ``tile_text(text, need)``: the document's UTF-8 bytes (a
+    null or empty text counts as one space) repeated end to end and cut
+    to ``need`` bytes, as a uint8 array. It is the pixel/sample source
+    of every text-derived payload, and the SQL duals re-derive it byte
+    for byte. A factory so it ships by value."""
+
+    def tile_text(text, need: int):
+        b = np.frombuffer((text or " ").encode("utf-8"), dtype=np.uint8)
+        return np.tile(b, need // max(b.size, 1) + 1)[:need]
+
+    return tile_text
 
 
+_tile_text = _make_text_tiler()
+
+
+def _synthetic_media(spark: SparkSession, sf_dir: str, mime: str, payload) -> DataFrame:
+    """One synthetic ``mime`` payload per document, as
+    ``doc_id long, mime string, payload binary``: ``payload(doc_id, text)``
+    returns the row's bytes and must be a function nested in the calling
+    entry (it runs on the executors).
+
+    The Python codec dominates per-row cost and documents.parquet is a
+    single row-group at test SFs (1-2 scan splits): fan the scan out or
+    the whole encode/decode pipeline runs on 1-2 cores (measured: 27x for
+    10x data in a full-catalog sweep; fan_out restores ~linear scaling
+    and is a no-op on an already-split scan)."""
+    docs = fan_out(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
+
+    def encode_batches(batches):
+        import pandas as _pd
+
+        for pdf in batches:
+            yield _pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "mime": [mime] * len(pdf),
+                    "payload": [
+                        payload(int(i), text) for i, text in zip(pdf["doc_id"], pdf["text"])
+                    ],
+                }
+            )
+
+    return docs.mapInPandas(encode_batches, schema="doc_id long, mime string, payload binary")
 
 
 def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL PNG decode path (non-stub) over a MIXED corpus: each
+    """REAL PNG decode path over a MIXED corpus: each
     document's text bytes become a deterministic small image whose PNG
     class cycles with doc_id over the five real-corpus variants — 8-bit
     gray, 8-bit RGB (filters 0-4 cycling), indexed-color (PLTE, sub-byte
     bit-packed scanlines), indexed-color + tRNS (decodes to RGBA), and
     16-bit grayscale — then decoded back by the full parser
     (``operators.multimodal.png_decode``: CRC verify, inflate, unfilter,
-    palette map, bit-unpack). ZERO NotImplementedError rows (r7 verdict
-    #4: palette PNGs are the most common real-corpus class the codec
-    used to reject; Adam7 interlace decode landed in r8 too, so the PNG
-    codec has no scope gate left). Both stages are Arrow-batched
-    map-only mapInPandas; the codec ships by value in the closures.
+    palette map, bit-unpack). ZERO NotImplementedError rows: palette
+    PNGs are the most common real-corpus class, and with Adam7
+    interlace decode the PNG codec has no scope gate left. Both stages
+    are Arrow-batched map-only mapInPandas.
 
-    FULL DuckDB oracle since r12 (``DECODE_PNG_SQL``: every variant
+    FULL DuckDB oracle (``DECODE_PNG_SQL``: every variant
     tiles the text bytes, so each image's pixel mean is an exact
     integer ratio derivable from per-byte moments — the hash compare
     exercises filters 0-4, palette packing, tRNS→RGBA and 16-bit
@@ -80,78 +127,39 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     enc, enc_pal = png_encode, png_encode_palette
-    # the Python codec dominates per-row cost and documents.parquet is a
-    # single row-group at test SFs (1-2 scan splits): fan the scan out
-    # or the whole encode/decode pipeline runs on 1-2 cores (measured:
-    # 27x for 10x data in the round-6 full-catalog sweep; fan_out
-    # restores ~linear scaling and is a no-op on an already-split scan)
-    docs = fan_out(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
 
-    def encode_batches(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = _np.frombuffer((text or " ").encode("utf-8"), dtype=_np.uint8)
-                i = int(doc_id)
-                w = 4 + i % 13
-                h = 4 + i % 11
-                variant = i % 5
-                if variant == 0:  # 8-bit grayscale, every filter type
-                    need = w * h
-                    px = _np.tile(b, need // max(b.size, 1) + 1)[:need].reshape(h, w)
-                    payloads.append(enc(px, filters=range(5)))
-                elif variant == 1:  # 8-bit RGB, every filter type
-                    need = w * h * 3
-                    px = _np.tile(b, need // max(b.size, 1) + 1)[:need].reshape(h, w, 3)
-                    payloads.append(enc(px, filters=range(5)))
-                elif variant == 2:  # indexed-color: <=16 colors, 4-bit packed
-                    need = w * h
-                    idx = _np.tile(b, need // max(b.size, 1) + 1)[:need].reshape(h, w) % 16
-                    colors = _np.stack(
-                        [_np.arange(16) * 16, _np.arange(16) * 8, _np.arange(16)], axis=1
-                    ).astype(_np.uint8)
-                    payloads.append(enc_pal(colors[idx]))
-                elif variant == 3:  # indexed + tRNS -> RGBA decode path
-                    need = w * h
-                    idx = _np.tile(b, need // max(b.size, 1) + 1)[:need].reshape(h, w) % 4
-                    colors = _np.array(
-                        [[0, 0, 0], [80, 90, 100], [160, 10, 20], [240, 250, 5]],
-                        dtype=_np.uint8,
-                    )
-                    # EXPLICIT palette (r12 review): np.unique-derived
-                    # PLTE order re-aligns the positional tRNS table
-                    # whenever a doc's bytes happen to omit a residue
-                    # class, silently breaking the residue→alpha map the
-                    # analytic dual assumes (and crashing below 3
-                    # distinct residues). Pinning the palette keeps
-                    # index == byte%4 for every document.
-                    payloads.append(
-                        enc_pal(colors[idx], trns=[0, 255, 128], palette=colors)
-                    )
-                else:  # 16-bit grayscale
-                    need = w * h
-                    px16 = (
-                        _np.tile(b, need // max(b.size, 1) + 1)[:need]
-                        .astype(_np.uint16)
-                        .reshape(h, w)
-                        * 257
-                    )
-                    payloads.append(enc(px16, filters=range(5)))
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "mime": ["image/png"] * len(payloads),
-                    "payload": payloads,
-                }
+    def payload(i, text):
+        w = 4 + i % 13
+        h = 4 + i % 11
+        variant = i % 5
+        if variant == 0:  # 8-bit grayscale, every filter type
+            return enc(_tile_text(text, w * h).reshape(h, w), filters=range(5))
+        if variant == 1:  # 8-bit RGB, every filter type
+            return enc(_tile_text(text, w * h * 3).reshape(h, w, 3), filters=range(5))
+        if variant == 2:  # indexed-color: <=16 colors, 4-bit packed
+            idx = _tile_text(text, w * h).reshape(h, w) % 16
+            colors = np.stack(
+                [np.arange(16) * 16, np.arange(16) * 8, np.arange(16)], axis=1
+            ).astype(np.uint8)
+            return enc_pal(colors[idx])
+        if variant == 3:  # indexed + tRNS -> RGBA decode path
+            idx = _tile_text(text, w * h).reshape(h, w) % 4
+            colors = np.array(
+                [[0, 0, 0], [80, 90, 100], [160, 10, 20], [240, 250, 5]],
+                dtype=np.uint8,
             )
+            # EXPLICIT palette: np.unique-derived PLTE order re-aligns
+            # the positional tRNS table whenever a doc's bytes happen to
+            # omit a residue class, silently breaking the residue→alpha
+            # map the analytic dual assumes (and crashing below 3
+            # distinct residues). Pinning the palette keeps
+            # index == byte%4 for every document.
+            return enc_pal(colors[idx], trns=[0, 255, 128], palette=colors)
+        # 16-bit grayscale
+        px16 = _tile_text(text, w * h).astype(np.uint16).reshape(h, w) * 257
+        return enc(px16, filters=range(5))
 
-    media = docs.mapInPandas(
-        encode_batches, schema="doc_id long, mime string, payload binary"
-    )
-    decoded = decode_png_media(media)
+    decoded = decode_png_media(_synthetic_media(spark, sf_dir, "image/png", payload))
     return decoded.groupBy("n_channels").agg(
         F.count(F.lit(1)).alias("n_images"),
         F.sum("width").cast("long").alias("sum_width"),
@@ -160,7 +168,7 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Analytic dual (r12): all five PNG variants tile the document's text
+# Analytic dual: all five PNG variants tile the document's text
 # bytes, so each decoded image's pixel mean is an exact integer ratio
 # derivable from three per-byte functions — the byte itself (gray/RGB/
 # 16-bit), byte%16 mapped through the arithmetic palette (channel sum
@@ -227,13 +235,13 @@ FROM m GROUP BY 1
 
 
 def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL WAV decode path (non-stub, the audio sibling of
+    """REAL WAV decode path (the audio sibling of
     ``multimodal_decode_png``): each document's text bytes become a
     deterministic PCM16 signal (rate cycling 8/16/44.1 kHz, mono/stereo
     alternating), encoded to REAL RIFF/WAVE bytes and decoded back by
     the full parser (``operators.multimodal.wav_decode``: chunk walk,
     fmt validation, frame alignment). Both stages Arrow-batched map-only
-    mapInPandas; codec ships by value. FULL DuckDB oracle since r12
+    mapInPandas. FULL DuckDB oracle
     (``DECODE_WAV_SQL``: the signal is the text bytes tiled, so every
     digest value — counts, durations, per-group RMS — is analytically
     derivable with exact-integer moment sums); sample-exact round-trip,
@@ -242,41 +250,15 @@ def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import decode_wav_media, wav_encode
 
     enc = wav_encode
-    # the Python codec dominates per-row cost and documents.parquet is a
-    # single row-group at test SFs (1-2 scan splits): fan the scan out
-    # or the whole encode/decode pipeline runs on 1-2 cores (measured:
-    # 27x for 10x data in the round-6 full-catalog sweep; fan_out
-    # restores ~linear scaling and is a no-op on an already-split scan)
-    docs = fan_out(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
+    rates = (8000, 16000, 44100)
 
-    def encode_batches(batches):
-        import numpy as _np
-        import pandas as _pd
+    def payload(i, text):
+        c = 1 if i % 2 else 2
+        n = (64 + i % 101) * c
+        sig = ((_tile_text(text, n).astype(np.int16) - 128) * 256).reshape(-1, c)
+        return enc(sig, sample_rate=rates[i % 3])
 
-        rates = (8000, 16000, 44100)
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = _np.frombuffer((text or " ").encode("utf-8"), dtype=_np.uint8)
-                c = 1 if int(doc_id) % 2 else 2
-                n = (64 + int(doc_id) % 101) * c
-                sig = (
-                    (_np.tile(b, n // max(b.size, 1) + 1)[:n].astype(_np.int16) - 128)
-                    * 256
-                ).reshape(-1, c)
-                payloads.append(enc(sig, sample_rate=rates[int(doc_id) % 3]))
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "mime": ["audio/wav"] * len(payloads),
-                    "payload": payloads,
-                }
-            )
-
-    media = docs.mapInPandas(
-        encode_batches, schema="doc_id long, mime string, payload binary"
-    )
-    decoded = decode_wav_media(media)
+    decoded = decode_wav_media(_synthetic_media(spark, sf_dir, "audio/wav", payload))
     # total duration = sum(frames)/rate, ONE exact-integer division per
     # group rather than a float fold of per-clip frames/rate terms: the
     # fold lands exactly on a 4dp half-way point whenever sum(frames)
@@ -300,7 +282,7 @@ def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Analytic dual (r12, the sniff_headers move extended to SIGNAL VALUES):
+# Analytic dual (the sniff_headers derivation extended to SIGNAL VALUES):
 # the PCM signal is the document's text bytes tiled to
 # (64 + id%101)·c samples, shifted/scaled to ((b−128)·256)², so every
 # digest column is derivable from (doc_id, text) alone — per-doc
@@ -356,7 +338,7 @@ FROM per GROUP BY rate, c
 
 
 def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio feature extraction (the non-stub feature-extract stage):
+    """REAL audio feature extraction (the feature-extract stage):
     each document becomes a deterministic pure-tone WAV clip (frequency
     keyed by doc_id, PCM16 via the real encoder), and
     ``operators.multimodal.audio_features_media`` extracts RMS,
@@ -370,34 +352,14 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import audio_features_media, wav_encode
 
     enc = wav_encode
-    # fan out: Python codec + FFT dominate per-row cost; single-row-group
-    # scans otherwise pin the pipeline to 1-2 cores (see decode entries)
-    docs = fan_out(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
+    rate = 16000
 
-    def encode_batches(batches):
-        import numpy as _np
-        import pandas as _pd
+    def payload(i, _text):
+        f = 200.0 + (i % 20) * 100.0  # 200..2100 Hz
+        t = np.arange(1024) / rate
+        return enc((np.sin(2 * np.pi * f * t) * 12000).astype(np.int16), sample_rate=rate)
 
-        rate = 16000
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                f = 200.0 + (int(doc_id) % 20) * 100.0  # 200..2100 Hz
-                t = _np.arange(1024) / rate
-                sig = (_np.sin(2 * _np.pi * f * t) * 12000).astype(_np.int16)
-                payloads.append(enc(sig, sample_rate=rate))
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "mime": ["audio/wav"] * len(payloads),
-                    "payload": payloads,
-                }
-            )
-
-    media = docs.mapInPandas(
-        encode_batches, schema="doc_id long, mime string, payload binary"
-    )
-    feats = audio_features_media(media)
+    feats = audio_features_media(_synthetic_media(spark, sf_dir, "audio/wav", payload))
     band = (F.floor(F.col("peak_freq_hz") / 500) * 500).cast("int").alias("peak_band_hz")
     return (
         feats.groupBy(band)
@@ -418,9 +380,10 @@ def multimodal_sniff_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain text bytes — and the sniffer classifies + extracts
     dims/rate from the first 4 KiB WITHOUT decoding. The per-format
     routing report (counts + dimension sums) is what a media lake
-    consults before spending decode cycles. Map-only.
+    consults before spending decode cycles. Map-only; the sniffer reads
+    no mime, so the mixed corpus is labelled application/octet-stream.
 
-    FULL DuckDB oracle (r12 promotion): every header field the sniffer
+    FULL DuckDB oracle: every header field the sniffer
     must extract is an analytically-known function of doc_id (the
     payload generator keys kind/dims/rate on ``doc_id`` alone —
     ``w = 2 + id%9``, ``h = 3 + id%7``, rate 8000/16000 by parity), so
@@ -435,47 +398,31 @@ def multimodal_sniff_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     enc_png, enc_wav = png_encode, wav_encode
     pack = struct.pack
-    # the Python codec dominates per-row cost and documents.parquet is a
-    # single row-group at test SFs (1-2 scan splits): fan the scan out
-    # or the whole encode/decode pipeline runs on 1-2 cores (measured:
-    # 27x for 10x data in the round-6 full-catalog sweep; fan_out
-    # restores ~linear scaling and is a no-op on an already-split scan)
-    docs = fan_out(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
 
-    def build_batches(batches):
-        import numpy as _np
-        import pandas as _pd
+    def gif(w, h):
+        return b"GIF89a" + pack("<HH", w, h) + b"\x00\x00\x00"
 
-        def gif(w, h):
-            return b"GIF89a" + pack("<HH", w, h) + b"\x00\x00\x00"
+    def jpeg(w, h, c):
+        sof = b"\xff\xc0" + pack(">H", 8 + 3 * c) + b"\x08" + pack(">HH", h, w) + bytes([c])
+        return b"\xff\xd8" + b"\xff\xe0" + pack(">H", 4) + b"\x00\x00" + sof + b"\xff\xd9"
 
-        def jpeg(w, h, c):
-            sof = b"\xff\xc0" + pack(">H", 8 + 3 * c) + b"\x08" + pack(">HH", h, w) + bytes([c])
-            return b"\xff\xd8" + b"\xff\xe0" + pack(">H", 4) + b"\x00\x00" + sof + b"\xff\xd9"
+    def payload(i, text):
+        w, h, c = 2 + i % 9, 3 + i % 7, (1, 3)[i % 2]
+        kind = i % 5
+        if kind == 0:
+            return enc_png(_tile_text(text, w * h * c).reshape(h, w, c))
+        if kind == 1:
+            sig = (np.arange(32 * c, dtype=np.int16) * 100).reshape(-1, c)
+            return enc_wav(sig, sample_rate=(8000, 16000)[i % 2])
+        if kind == 2:
+            return gif(w, h)
+        if kind == 3:
+            return jpeg(w, h, c)
+        return (text or " ").encode("utf-8")
 
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                w, h, c = 2 + i % 9, 3 + i % 7, (1, 3)[i % 2]
-                kind = i % 5
-                if kind == 0:
-                    raw = _np.frombuffer((text or " ").encode(), dtype=_np.uint8)
-                    px = _np.tile(raw, (w * h * c) // max(raw.size, 1) + 1)[: w * h * c]
-                    payloads.append(enc_png(px.reshape(h, w, c)))
-                elif kind == 1:
-                    sig = (_np.arange(32 * c, dtype=_np.int16) * 100).reshape(-1, c)
-                    payloads.append(enc_wav(sig, sample_rate=(8000, 16000)[i % 2]))
-                elif kind == 2:
-                    payloads.append(gif(w, h))
-                elif kind == 3:
-                    payloads.append(jpeg(w, h, c))
-                else:
-                    payloads.append((text or " ").encode("utf-8"))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(build_batches, schema="doc_id long, payload binary")
-    sniffed = sniff_media(media)
+    sniffed = sniff_media(
+        _synthetic_media(spark, sf_dir, "application/octet-stream", payload)
+    )
     return sniffed.groupBy("detected").agg(
         F.count(F.lit(1)).alias("n_objects"),
         F.sum("width").cast("long").alias("sum_width"),
@@ -484,7 +431,7 @@ def multimodal_sniff_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Analytic dual (r12): the payload generator above keys every sniffable
+# Analytic dual: the payload generator above keys every sniffable
 # field on doc_id alone — kind = id%5 (png/wav/gif/jpeg/text), w=2+id%9,
 # h=3+id%7, WAV rate 8000/16000 by id parity; the sniffer reports dims
 # for the three image formats, rate for WAV, and 'unknown' for text
@@ -517,54 +464,39 @@ FROM s GROUP BY 1
 
 
 def multimodal_frame_sample_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL 1:N frame sampling (non-stub upgrade of the frame_sample
-    stub): each document becomes a deterministic ANIMATED GIF — 2-6
+    """REAL 1:N frame sampling: each document becomes a deterministic
+    ANIMATED GIF — 2-6
     solid-color frames keyed by doc_id, encoded by the full GIF89a
     encoder (palette build, variable-width LZW, GCE/descriptor blocks) —
     and ``operators.multimodal.sample_gif_frames`` decodes (LZW inflate,
     palette lookup, disposal compositing) and emits every 2nd composited
     frame as its own row. Digest: per frame-count, clips + sampled rows
     + mean decoded red channel (analytically known for solid frames —
-    pinned exactly in tests/test_operators.py). FULL DuckDB oracle
-    since r12: that same analytic knowledge IS the dual
+    pinned exactly in tests/test_operators.py). FULL DuckDB oracle:
+    that same analytic knowledge IS the dual
     (``FRAME_SAMPLE_GIF_SQL`` derives the digest from doc_id alone, so
     the hash compare exercises the whole GIF89a round-trip). Both
     stages Arrow-batched map-only mapInPandas."""
     from ..operators.multimodal import gif_encode, sample_gif_frames
 
     enc = gif_encode
-    # Python codec dominates per-row cost; single-row-group scans would
-    # pin the pipeline to 1-2 cores (see the PNG/WAV decode entries)
-    docs = fan_out(load_table(spark, sf_dir, "documents").select("doc_id"))
 
-    def encode_batches(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                n_frames = 2 + i % 5
-                w, h = 4 + i % 9, 3 + i % 7
-                frames = [
-                    _np.full((h, w, 3), [(i + 37 * k) % 256, (2 * i + k) % 256, (3 * i + 11 * k) % 256], _np.uint8)
-                    for k in range(n_frames)
-                ]
-                # every other clip is INTERLACED (spec §20 row order) —
-                # the decoder must composite both classes identically (r8)
-                payloads.append(enc(frames, delay_cs=4 + i % 3, interlace=i % 2 == 0))
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "mime": ["image/gif"] * len(payloads),
-                    "payload": payloads,
-                }
+    def payload(i, _text):
+        n_frames = 2 + i % 5
+        w, h = 4 + i % 9, 3 + i % 7
+        frames = [
+            np.full(
+                (h, w, 3),
+                [(i + 37 * k) % 256, (2 * i + k) % 256, (3 * i + 11 * k) % 256],
+                np.uint8,
             )
+            for k in range(n_frames)
+        ]
+        # every other clip is INTERLACED (spec §20 row order) — the
+        # decoder must composite both classes identically
+        return enc(frames, delay_cs=4 + i % 3, interlace=i % 2 == 0)
 
-    media = docs.mapInPandas(
-        encode_batches, schema="doc_id long, mime string, payload binary"
-    )
+    media = _synthetic_media(spark, sf_dir, "image/gif", payload)
     frames = sample_gif_frames(media, every_n=2, max_frames=8)
     return (
         frames.groupBy("n_frames")
@@ -578,7 +510,7 @@ def multimodal_frame_sample_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Analytic dual (r12): clips are doc_id-keyed solid-frame GIFs —
+# Analytic dual: clips are doc_id-keyed solid-frame GIFs —
 # n_frames = 2 + id%5, frame k's composited red channel is exactly
 # (id + 37k) % 256 (solid fill, full-frame disposal), every frame's
 # delay is 4 + id%3, and the 1:2 sampler emits frames {0,2,4}∩range
@@ -606,14 +538,14 @@ FROM s GROUP BY 1
 
 
 def multimodal_resize_png(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image resize (non-stub upgrade of the resize stub): documents
-    become real PNGs (same deterministic generator as
+    """REAL image resize: documents
+    become real PNGs (tiled text bytes, like
     ``multimodal_decode_png``), are decoded + nearest-neighbor resampled
     to 16x12 + RE-ENCODED as real PNGs by
     ``operators.multimodal.resize_png_media``, and the digest re-decodes
     the new payloads with the full parser — proving the resized bytes
     are themselves valid PNGs of exactly the target dims. FULL DuckDB
-    oracle since r12 (``RESIZE_PNG_SQL``): nearest-neighbor is a pure
+    oracle (``RESIZE_PNG_SQL``): nearest-neighbor is a pure
     integer index map over the tiled text bytes, so the dual re-derives
     every resized pixel from (doc_id, text) and the hash compare
     witnesses the decode → resample → re-encode → re-decode loop
@@ -622,33 +554,12 @@ def multimodal_resize_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import decode_png_media, png_encode, resize_png_media
 
     enc = png_encode
-    docs = fan_out(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
 
-    def encode_batches(batches):
-        import numpy as _np
-        import pandas as _pd
+    def payload(i, text):
+        w, h, c = 4 + i % 13, 4 + i % 11, 1 if i % 2 else 3
+        return enc(_tile_text(text, w * h * c).reshape(h, w, c))
 
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = _np.frombuffer((text or " ").encode("utf-8"), dtype=_np.uint8)
-                w = 4 + int(doc_id) % 13
-                h = 4 + int(doc_id) % 11
-                c = 1 if int(doc_id) % 2 else 3
-                need = w * h * c
-                px = _np.tile(b, need // max(b.size, 1) + 1)[:need].reshape(h, w, c)
-                payloads.append(enc(px))
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "mime": ["image/png"] * len(payloads),
-                    "payload": payloads,
-                }
-            )
-
-    media = docs.mapInPandas(
-        encode_batches, schema="doc_id long, mime string, payload binary"
-    )
+    media = _synthetic_media(spark, sf_dir, "image/png", payload)
     resized = resize_png_media(media, width=16, height=12)
     redecoded = decode_png_media(resized.select("doc_id", "mime", "payload"))
     return redecoded.groupBy("width", "height", "n_channels").agg(
@@ -658,7 +569,7 @@ def multimodal_resize_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Analytic dual (r12): nearest-neighbor resize is a pure INDEX map —
+# Analytic dual: nearest-neighbor resize is a pure INDEX map —
 # target pixel (y', x', ch) reads source flat offset
 # ((y'·h)//12·w + (x'·w)//16)·c + ch of the tiled byte array, so the
 # resized image's pixel multiset is derivable from (doc_id, text)
@@ -715,14 +626,14 @@ FROM doc GROUP BY 3
 
 
 def multimodal_image_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image feature extraction (non-stub upgrade of the embed
-    stub): real PNGs → ``operators.multimodal.image_features_media``
+    """REAL image feature extraction: real PNGs →
+    ``operators.multimodal.image_features_media``
     (decode, per-mille integer BT.601 luma, 8x8 patch resample,
     mean-centered unit-normalized 64-dim embedding) — the content
     signature that feeds ``operators.similarity`` unchanged. Digest
     consumes the embedding with NATIVE array expressions (L2 norm via
     F.aggregate — must be 1.0 for any non-constant image) per luma
-    decile. FULL DuckDB oracle since r12 (``IMAGE_EMBED_SQL``): the
+    decile. FULL DuckDB oracle (``IMAGE_EMBED_SQL``): the
     integer-moment luma discipline makes the entire chain — decode,
     index-map resample, centering, normalization, float32 embedding,
     left-fold l2 — replayable from (doc_id, text) op for op. Map-only
@@ -730,32 +641,12 @@ def multimodal_image_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import image_features_media, png_encode
 
     enc = png_encode
-    docs = fan_out(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
 
-    def encode_batches(batches):
-        import numpy as _np
-        import pandas as _pd
+    def payload(i, text):
+        w, h = 6 + i % 17, 5 + i % 13
+        return enc(_tile_text(text, w * h * 3).reshape(h, w, 3))
 
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = _np.frombuffer((text or " ").encode("utf-8"), dtype=_np.uint8)
-                w = 6 + int(doc_id) % 17
-                h = 5 + int(doc_id) % 13
-                need = w * h * 3
-                px = _np.tile(b, need // max(b.size, 1) + 1)[:need].reshape(h, w, 3)
-                payloads.append(enc(px))
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "mime": ["image/png"] * len(payloads),
-                    "payload": payloads,
-                }
-            )
-
-    media = docs.mapInPandas(
-        encode_batches, schema="doc_id long, mime string, payload binary"
-    )
+    media = _synthetic_media(spark, sf_dir, "image/png", payload)
     emb = image_features_media(media, grid=8)
     l2 = F.sqrt(
         F.aggregate(
@@ -775,7 +666,7 @@ def multimodal_image_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Analytic dual (r12): the embed pipeline is lossless-PNG round-trip →
+# Analytic dual: the embed pipeline is lossless-PNG round-trip →
 # per-mille integer luma (299R+587G+114B, an exact BIGINT per pixel) →
 # nearest-neighbor 8×8 index map → moment-identity centering/
 # normalization → float32 embedding. Every sum the statistics need
@@ -865,8 +756,8 @@ GROUP BY 1
 
 
 def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL baseline JPEG decode path (r8 — the dominant real-corpus image
-    format, previously header-sniff only): each document's text bytes
+    """REAL JPEG decode path (the dominant real-corpus image
+    format): each document's text bytes
     become a deterministic image whose JPEG class cycles with doc_id over
     the five real-corpus variants — grayscale, 4:4:4 color, 4:2:0
     chroma-subsampled, 4:4:4 with restart intervals (DRI + RSTn markers,
@@ -882,53 +773,27 @@ def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trip error bounds, solid-block exactness, restart-equivalence,
     and the independent header-sniffer dims cross-check are pinned in
     tests/test_operators.py. Both stages Arrow-batched map-only
-    mapInPandas; the codec ships by value."""
+    mapInPandas."""
     from ..operators.multimodal import decode_jpeg_media, jpeg_encode
 
     enc = jpeg_encode
-    docs = fan_out(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
 
-    def encode_batches(batches):
-        import numpy as _np
-        import pandas as _pd
+    def payload(i, text):
+        w = 8 + i % 17
+        h = 8 + i % 13
+        variant = i % 5
+        if variant == 0:  # grayscale
+            return enc(_tile_text(text, w * h).reshape(h, w), quality=90)
+        px = _tile_text(text, w * h * 3).reshape(h, w, 3)
+        if variant == 1:  # 4:4:4
+            return enc(px, quality=90)
+        if variant == 2:  # 4:2:0
+            return enc(px, quality=90, subsample=True)
+        if variant == 3:  # restart intervals
+            return enc(px, quality=90, restart_interval=2)
+        return enc(px, quality=90, progressive=True)  # progressive (SOF2, annex-G refinement)
 
-        for pdf in batches:
-            payloads, variants = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = _np.frombuffer((text or " ").encode("utf-8"), dtype=_np.uint8)
-                i = int(doc_id)
-                w = 8 + i % 17
-                h = 8 + i % 13
-                variant = i % 5
-                if variant == 0:  # grayscale
-                    need = w * h
-                    px = _np.tile(b, need // max(b.size, 1) + 1)[:need].reshape(h, w)
-                    payloads.append(enc(px, quality=90))
-                else:
-                    need = w * h * 3
-                    px = _np.tile(b, need // max(b.size, 1) + 1)[:need].reshape(h, w, 3)
-                    if variant == 1:  # 4:4:4
-                        payloads.append(enc(px, quality=90))
-                    elif variant == 2:  # 4:2:0
-                        payloads.append(enc(px, quality=90, subsample=True))
-                    elif variant == 3:  # restart intervals
-                        payloads.append(enc(px, quality=90, restart_interval=2))
-                    else:  # progressive (SOF2, annex-G refinement)
-                        payloads.append(enc(px, quality=90, progressive=True))
-                variants.append(variant)
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "mime": ["image/jpeg"] * len(payloads),
-                    "variant": variants,
-                    "payload": payloads,
-                }
-            )
-
-    media = docs.mapInPandas(
-        encode_batches, schema="doc_id long, mime string, variant int, payload binary"
-    )
-    decoded = decode_jpeg_media(media)
+    decoded = decode_jpeg_media(_synthetic_media(spark, sf_dir, "image/jpeg", payload))
     variant = (F.col("doc_id") % 5).cast("int").alias("variant")
     return (
         decoded.select(variant, "width", "height", "n_channels", "mean_px")

@@ -132,6 +132,11 @@ PARITY_SMOKE = {
     "pagerank_copurchase",
     "decontaminate_bloom",
     "multimodal_decode_png",
+    "multimodal_decode_wav",
+    "multimodal_sniff_headers",
+    "multimodal_frame_sample_gif",
+    "multimodal_resize_png",
+    "multimodal_image_embed",
     "merge_upsert",
 }
 

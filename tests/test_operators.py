@@ -2435,6 +2435,39 @@ def test_image_features_media_known_blocks_and_unit_norm(spark):
     assert out[2].mean_luma == 200.0 and out[2].std_luma == 0.0
 
 
+@pytest.mark.parametrize(
+    "op, schema",
+    [
+        ("decode_png_media", "PNG_DECODED_SCHEMA"),
+        ("decode_wav_media", "WAV_DECODED_SCHEMA"),
+        ("audio_features_media", "AUDIO_FEATURES_SCHEMA"),
+        ("sample_gif_frames", "GIF_FRAMES_SCHEMA"),
+        ("image_features_media", None),
+        ("decode_jpeg_media", "JPEG_DECODED_SCHEMA"),
+    ],
+)
+def test_media_operator_all_dropped_batch(spark, op, schema):
+    """Every row has a mime the operator drops, so every Arrow batch is
+    empty: it must still convert (the image embedding's array<float>
+    column included), giving zero rows under the declared schema."""
+    from pyspark.sql.types import StructType
+
+    import mlb_win_predictor_spark.operators.multimodal as mm
+
+    ddl = (
+        getattr(mm, schema)
+        if schema
+        else "doc_id long, embedding array<float>, mean_luma double, std_luma double"
+    )
+    media = spark.createDataFrame(
+        [(1, "text/plain", bytearray(b"x")), (2, "video/mp4", bytearray(b"\x89PNG"))],
+        "doc_id long, mime string, payload binary",
+    )
+    out = getattr(mm, op)(media)
+    assert out.collect() == []
+    assert out.schema == StructType.fromDDL(ddl)
+
+
 def test_jpeg_roundtrip_bounds_and_variants():
     """Baseline JPEG codec (r8): solid blocks are DC-only and decode
     EXACTLY; smooth content at q95 stays within a small bound for 4:4:4,
